@@ -1846,15 +1846,18 @@ class PromQLEvaluator:
         epoch-aligned grid is pure integer arithmetic — consumers that
         only need the grid SIZE or MAX no longer pay a per-rule
         aggregate + broadcast join for it). Descending, like `_grid`'s
-        k-order; SQL `div` and Python `//` agree on the positive
-        microsecond axis."""
+        k-order. SQL `div` truncates toward zero where Python `//`
+        floors, so the anchor divides the same way `_grid`'s does —
+        the two differ once `t_ref - offset` is negative."""
         n = int(sub.range_us // sub.step_us) + 1
         t_ref = (
             self._tmax_us
             if sub.at_us is None or sub.at_us < 0
             else sub.at_us
         )
-        e0 = ((t_ref - sub.offset_us) // sub.step_us) * sub.step_us
+        a = t_ref - sub.offset_us
+        q = abs(a) // sub.step_us
+        e0 = (q if a >= 0 else -q) * sub.step_us
         lo = t_ref - (sub.offset_us + sub.range_us)
         return [
             e0 - k * sub.step_us

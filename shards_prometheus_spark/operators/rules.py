@@ -398,32 +398,32 @@ def eval_alert_for_group(
     true evaluations (the activation tick plus for/step more). The
     grid span is therefore `for + step`, which yields exactly
     `for/step + 1` instants in (t - for - step, t]."""
-    batches: dict[tuple, list[tuple[str, str, str]]] = {}
+    batches: dict[tuple, list] = {}
     singles: list[tuple[str, str, int, int]] = []
-    for name, expr, for_us, step_us in rules:
+    for rule in rules:
+        _name, expr, for_us, step_us = rule
         shape = _threshold_rule_shape(expr)
         if shape is None:
-            singles.append((name, expr, for_us, step_us))
+            singles.append(rule)
             continue
         metric, op, by, fn, range_us = shape
         batches.setdefault(
             (by, fn, range_us, for_us, step_us), []
-        ).append((name, metric, op))
+        ).append((rule, metric, op))
     parts = []
     for (by, fn, range_us, for_us, step_us), batch in batches.items():
-        if len(batch) < 2:
-            # a lone rule gains nothing from the fused path — keep the
-            # evaluator plan (identical output either way)
-            n0, m0, _o = batch[0]
-            for name, expr, f_us, s_us in rules:
-                if name == n0 and (f_us, s_us) == (for_us, step_us):
-                    singles.append((name, expr, f_us, s_us))
-                    break
+        metrics = [m for _r, m, _o in batch]
+        if len(batch) < 2 or len(set(metrics)) < len(metrics):
+            # a lone rule gains nothing from the fused path, and two
+            # rules on one metric cannot be told apart by the metric
+            # dimension the fused path keys on — keep the per-rule
+            # evaluator plan
+            singles.extend(r for r, _m, _o in batch)
             continue
         parts.append(
             _eval_threshold_batch(
-                ev, batch, by, fn, range_us,
-                for_us + step_us, step_us, name_col,
+                ev, [(r[0], m, o) for r, m, o in batch], by, fn,
+                range_us, for_us + step_us, step_us, name_col,
             )
         )
     for name, expr, for_us, step_us in singles:

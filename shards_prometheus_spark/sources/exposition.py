@@ -1873,9 +1873,16 @@ class MetricsExposer:
         RemoteWriteReceiver.receive)."""
         return self._rw.receive(payload, content_type)
 
+    def _rw_samples_live(self) -> bool:
+        """Whether reads union a pushed store (a push receiver is on
+        and holds rows)."""
+        return bool(
+            (self._remote_write or self._otlp_receiver) and self._rw.n_rows
+        )
+
     def _rw_samples(self):
         """The pushed store as a samples relation (None when empty)."""
-        if self._rw.n_rows == 0:
+        if not self._rw_samples_live():
             return None
         return self._rw.samples(self._spark)
 
@@ -1897,11 +1904,7 @@ class MetricsExposer:
             if self._samples_fn is not None
             else samples_multi(self._spark, self._sf_dir)
         )
-        pushed = (
-            self._rw_samples()
-            if (self._remote_write or self._otlp_receiver)
-            else None
-        )
+        pushed = self._rw_samples()
         if pushed is not None:
             base = base.unionByName(pushed, allowMissingColumns=True)
         for metric, matchers, s_us, e_us in list(self._tombstones):
@@ -2111,35 +2114,22 @@ class MetricsExposer:
         )
 
         def make_evaluator(eval_ts_us):
-            if self._tombstones or self._rule_file is not None:
-                # admin deletions in force (every read evaluates over
-                # the masked relation; t_max re-derived per request —
-                # a deletion can move it), or a rule file is loaded:
-                # read_samples is then the ONE place that also unions
-                # the ALERTS/ALERTS_FOR_STATE synthetic series the
-                # rule evaluation records (upstream stores them in
-                # its TSDB; Grafana queries
+            if (
+                self._tombstones
+                or self._rule_file is not None
+                or self._rw_samples_live()
+            ):
+                # read_samples is the ONE place that builds the
+                # base ∪ pushed union (pushed state changes t_max
+                # between requests), masks admin deletions (t_max
+                # re-derived per request — a deletion can move it),
+                # and unions the ALERTS/ALERTS_FOR_STATE synthetic
+                # series a loaded rule file records (upstream stores
+                # them in its TSDB; Grafana queries
                 # ALERTS{alertstate="firing"} through this path)
                 return PromQLEvaluator(
                     self.read_samples(), eval_ts_us=eval_ts_us
                 )
-            pushed = (
-            self._rw_samples()
-            if (self._remote_write or self._otlp_receiver)
-            else None
-        )
-            if pushed is not None:
-                # pushed state changes t_max between requests — build
-                # over the union, live-registry style
-                base = (
-                    self._samples_fn()
-                    if self._samples_fn is not None
-                    else samples_multi(self._spark, self._sf_dir)
-                )
-                rel = base.unionByName(
-                    pushed, allowMissingColumns=True
-                )
-                return PromQLEvaluator(rel, eval_ts_us=eval_ts_us)
             if self._samples_fn is not None:
                 # live registry: the relation (and its t_max) grows
                 # between requests — rebuild per request

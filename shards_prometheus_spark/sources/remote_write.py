@@ -22,16 +22,19 @@ Three layers, each independently testable:
 - **HTTP receiver** (`RemoteWriteReceiver`): the POST
   `/api/v1/write` endpoint — decompress + parse per request
   (payloads are scrape-sized), rows appended to a driver-side store
-  the read API serves via `samples_fn` (collect-on-query over the
-  pushed state). 2xx on success (204 per the 1.0 spec), 400 on a
+  the read API serves via `samples_fn` (each read converts only the
+  rows pushed since the last one into an Arrow segment; see the
+  class docstring). 2xx on success (204 per the 1.0 spec), 400 on a
   corrupt payload — the public receiver contract.
 """
 
 from __future__ import annotations
 
+import functools
 import threading
 from typing import Iterator
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -814,17 +817,83 @@ def push_samples_for_config(samples: DataFrame, cfg) -> "dict[str, DataFrame]":
     return out
 
 
+def _rows_to_arrow(
+    rows: "list[tuple[dict, int, float]]", start: int
+) -> pa.Table:
+    """(labels incl. __name__, ts_ms, value) rows at global ingest
+    positions start, start+1, … → one Arrow table (event_id long,
+    metric string, labels map<string,string>, label_user string,
+    ts_us long, value double). event_id is -(position + 1); the
+    labels map keeps each row's own label order minus __name__, and
+    label_user is its `user` label."""
+    metrics, users, ts_us, values = [], [], [], []
+    offsets, keys, items = [0], [], []
+    for labels, ts_ms, value in rows:
+        metric = ""
+        for k, v in labels.items():
+            if k == "__name__":
+                metric = v
+            else:
+                keys.append(k)
+                items.append(v)
+        offsets.append(len(keys))
+        metrics.append(metric)
+        users.append(labels.get("user"))
+        ts_us.append(ts_ms * 1_000)
+        values.append(value)
+    n = len(rows)
+    return pa.Table.from_arrays(
+        [
+            pa.array(range(-start - 1, -start - n - 1, -1), pa.int64()),
+            pa.array(metrics, pa.string()),
+            pa.MapArray.from_arrays(
+                pa.array(offsets, pa.int32()),
+                pa.array(keys, pa.string()),
+                pa.array(items, pa.string()),
+            ),
+            pa.array(users, pa.string()),
+            pa.array(ts_us, pa.int64()),
+            pa.array(values, pa.float64()),
+        ],
+        names=["event_id", "metric", "labels", "label_user", "ts_us", "value"],
+    )
+
+
 class RemoteWriteReceiver:
     """POST `/api/v1/write` endpoint: the push half of the paired
-    server. Parsed rows accumulate in a driver-side store (payloads
-    are scrape-sized; the store is series×scrape-sized, the same
-    order as a live registry); `samples(spark)` renders the store as
-    the engine's samples relation, pluggable into MetricsExposer's
-    `samples_fn` so the full read API serves pushed data."""
+    server. `samples(spark)` renders the store as the engine's
+    samples relation, pluggable into MetricsExposer's `samples_fn`
+    so the full read API serves pushed data.
+
+    Store layout — an append-only table read incrementally:
+
+    - **tuple tail**: `receive` / `ingest_rows` only append the parsed
+      (labels, ts_ms, value) tuples under `_lock`. Ingest does no
+      conversion, so a push costs its decode and a list extend,
+      never a share of the store's size.
+    - **Arrow segments**: each `samples` call converts just the tail
+      pushed since the previous call into one Arrow table, ships it
+      to Spark once (`createDataFrame(table)`, series_id added), keeps
+      the immutable (table, DataFrame) pair as a new segment, drops
+      the converted tuples, and returns the union of all segments.
+    - **merge rule**: while the newest segment has at least half the
+      rows of the one before it, the two tables are concatenated
+      into one segment (log-structured, no size setting). Segment
+      sizes therefore at least halve from oldest to newest, so a
+      read's plan holds O(log n) leaves and each row is re-shipped
+      O(log n) times over the store's life.
+
+    `_render_lock` serialises renders; a returned DataFrame is a
+    snapshot that later pushes do not change."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
         self.host, self.port = host, port
+        #: tuples pushed since the last render (the unconverted tail)
         self._rows: list[tuple[dict, int, float]] = []
+        #: rows already converted into segments
+        self._n_done = 0
+        #: (Arrow table, its DataFrame), sizes halving oldest→newest
+        self._segments: list[tuple[pa.Table, DataFrame]] = []
         #: v2 side data (the 2.0 spec's metadata/exemplars/created
         #: fields), landed in the engine's existing side-relation
         #: shapes — see parse_write_request_v2_full
@@ -832,6 +901,7 @@ class RemoteWriteReceiver:
         self._metadata: dict = {}
         self._created: list = []
         self._lock = threading.Lock()
+        self._render_lock = threading.Lock()
         self._httpd = None
         self._thread = None
 
@@ -872,7 +942,7 @@ class RemoteWriteReceiver:
     @property
     def n_rows(self) -> int:
         with self._lock:
-            return len(self._rows)
+            return self._n_done + len(self._rows)
 
     @property
     def n_exemplars(self) -> int:
@@ -910,43 +980,50 @@ class RemoteWriteReceiver:
         )
 
     def samples(self, spark: SparkSession) -> DataFrame:
-        """The pushed store as the §1.2 samples relation.
+        """The pushed store as the §1.2 samples relation: the tail
+        pushed since the last call becomes a new segment (see the
+        class docstring), and the union of all segments is returned.
 
         series_id comes from model.series_id_expr — the SAME canonical
         hash every base relation uses — so a push targeting an
         existing (metric, labels) series lands in the same window
         partition as the base rows instead of splitting one logical
-        series in two. event_id is namespaced NEGATIVE (-1, -2, …):
-        the base corpus's event_ids are non-negative, so the
-        (ts_us, event_id) LAG tiebreak in increase/rate folds stays
-        deterministic across the union (pushed rows order before base
-        rows at an equal timestamp)."""
+        series in two. event_id is namespaced NEGATIVE (-1, -2, … in
+        ingest order): the base corpus's event_ids are non-negative,
+        so the (ts_us, event_id) LAG tiebreak in increase/rate folds
+        stays deterministic across the union (pushed rows order
+        before base rows at an equal timestamp)."""
         from shards_prometheus_spark.model import series_id_expr
 
-        with self._lock:
-            snapshot = list(self._rows)
-        data = []
-        for i, (labels, ts_ms, value) in enumerate(snapshot):
-            lbls = dict(labels)
-            metric = lbls.pop("__name__", "")
-            data.append(
-                (
-                    -(i + 1),
-                    metric,
-                    lbls,
-                    lbls.get("user"),
-                    ts_ms * 1_000,
-                    float(value),
+        with self._render_lock:
+            # the tail stays in _rows until its segment exists, so
+            # n_rows never dips and a failed conversion loses nothing
+            with self._lock:
+                tail, start = list(self._rows), self._n_done
+            n = len(tail)
+            if n or not self._segments:
+                table = _rows_to_arrow(tail, start)
+                keep = list(self._segments)
+                while keep and 2 * table.num_rows >= keep[-1][0].num_rows:
+                    older, _df = keep.pop()
+                    table = pa.concat_tables([older, table]).combine_chunks()
+                # cached: each read runs several Spark jobs over the
+                # union, which then scan the in-memory columns instead
+                # of re-reading the shipped Arrow batches
+                df = (
+                    spark.createDataFrame(table)
+                    .withColumn("series_id", series_id_expr("metric", "labels"))
+                    .cache()
                 )
+                for _t, merged in self._segments[len(keep):]:
+                    merged.unpersist()
+                self._segments = keep + [(table, df)]
+                with self._lock:
+                    del self._rows[:n]
+                    self._n_done += n
+            return functools.reduce(
+                DataFrame.union, (df for _t, df in self._segments)
             )
-        df = spark.createDataFrame(
-            data,
-            "event_id long, metric string, labels map<string,string>, "
-            "label_user string, ts_us long, value double",
-        )
-        return df.withColumn(
-            "series_id", series_id_expr("metric", "labels")
-        )
 
     # -- HTTP ------------------------------------------------------------
     def start(self) -> "RemoteWriteReceiver":

@@ -82,20 +82,12 @@ def test_grid_instant_leaf_last_sample_pick(spark):
     assert got == [(4 * H, 2.0), (5 * H, 8.0), (6 * H, 3.0)]
 
 
-def test_fused_threshold_batch_matches_per_rule_reference(spark):
-    """The vectorized alert batch must reproduce the per-rule
-    eval_range pipeline row for row (the old eval_alert_for_group
-    body, kept here as the reference semantics)."""
-    from shards_prometheus_spark.operators.rules import (
-        ALERT_FOR_RULES,
-        eval_alert_for_group,
-    )
-
-    ev = PromQLEvaluator.from_dir(spark, SF_SMOKE)
-    fused = eval_alert_for_group(ev, ALERT_FOR_RULES, "alertname")
-
+def _per_rule_alerts(ev, rules):
+    """The per-rule eval_range pipeline (the old eval_alert_for_group
+    body, kept here as the reference semantics), as sorted
+    (alertname, labels, value) rows."""
     parts = []
-    for name, expr, for_us, step_us in ALERT_FOR_RULES:
+    for name, expr, for_us, step_us in rules:
         span_us = for_us + step_us
         g = ev.eval_range(expr, span_us, step_us)
         ng = len(ev.grid_points_py(Subquery(None, span_us, step_us)))
@@ -115,11 +107,79 @@ def test_fused_threshold_batch_matches_per_rule_reference(spark):
     ref = parts[0]
     for p in parts[1:]:
         ref = ref.unionByName(p)
+    return _alert_rows(ref)
 
+
+def _alert_rows(df):
     k = lambda r: (r["alertname"], r["labels"], r["value"])  # noqa: E731
-    got = sorted(map(k, fused.collect()))
-    want = sorted(map(k, ref.collect()))
+    return sorted(map(k, df.collect()))
+
+
+def test_fused_threshold_batch_matches_per_rule_reference(spark):
+    """The vectorized alert batch must reproduce the per-rule
+    eval_range pipeline row for row."""
+    from shards_prometheus_spark.operators.rules import (
+        ALERT_FOR_RULES,
+        eval_alert_for_group,
+    )
+
+    ev = PromQLEvaluator.from_dir(spark, SF_SMOKE)
+    got = _alert_rows(eval_alert_for_group(ev, ALERT_FOR_RULES, "alertname"))
+    want = _per_rule_alerts(ev, ALERT_FOR_RULES)
     assert got == want and len(want) > 0
+
+
+def test_threshold_rules_on_one_metric_are_not_fused(spark):
+    """An above-average and a below-average alert on the SAME metric
+    share the fused batch key, but the fused path keys on metric and
+    so cannot tell them apart (it ORed both comparisons and named
+    every row after the first rule): such a batch must evaluate per
+    rule."""
+    from shards_prometheus_spark.operators.rules import (
+        eval_alert_for_group,
+    )
+
+    # click counters at 1h steps: users a and b grow faster than the
+    # per-instant average, c slower
+    rates = {"a": 9.0, "b": 6.0, "c": 0.0}
+    rows = [
+        (i * 3 + j, j, "click", {"user": u}, (i + 1) * H, i * r)
+        for i in range(12)
+        for j, (u, r) in enumerate(rates.items())
+    ]
+    ev = PromQLEvaluator(
+        spark.createDataFrame(
+            rows,
+            "event_id long, series_id long, metric string, "
+            "labels map<string,string>, ts_us long, value double",
+        )
+    )
+    lhs = "sum by (user) (increase(click[2h]))"
+    rules = [
+        ("ClicksAbove", f"{lhs} > scalar(avg({lhs}))", 3 * H, H),
+        ("ClicksBelow", f"{lhs} < scalar(avg({lhs}))", 3 * H, H),
+    ]
+    got = _alert_rows(eval_alert_for_group(ev, rules, "alertname"))
+    want = _per_rule_alerts(ev, rules)
+    assert got == want
+    assert [(r[0], r[1]) for r in want] == [
+        ("ClicksAbove", "user=a"),
+        ("ClicksAbove", "user=b"),
+        ("ClicksBelow", "user=c"),
+    ]
+
+
+def test_grid_points_py_matches_grid_before_epoch(spark):
+    """grid_points_py is the driver-side twin of _grid: with an offset
+    larger than t_max the anchor `t_max - offset` is negative, where
+    SQL `div` truncates toward zero and Python `//` floors — the
+    twin must divide the SQL way."""
+    ev = _grid_ev(spark)
+    for off in (10 * H, 7 * H + 1, 6 * H + 1_234_567, 0):
+        for at in (None, 2 * H + 5):
+            sub = Subquery(None, 3 * H, H, off, at)
+            want = [r["_ets"] for r in ev._grid(sub).collect()]
+            assert ev.grid_points_py(sub) == sorted(want, reverse=True)
 
 
 def test_fused_write_roundtrip_matches_chained(spark):

@@ -7,6 +7,7 @@ receiver feeding the read API.
 from __future__ import annotations
 
 import math
+import struct
 import urllib.error
 import urllib.request
 
@@ -926,3 +927,181 @@ def test_v2_send_half_roundtrip(spark):
     got_v2 = pushed_state("2.0")
     got_v1 = pushed_state("1.0")
     assert got_v2 == got_v1 and len(got_v2) == 2
+
+
+#: the stale-marker NaN (its bit pattern must survive the store)
+_STALE_NAN = struct.unpack("<d", struct.pack("<Q", 0x7FF0000000000002))[0]
+
+
+def _reference_render(spark, rows):
+    """The pushed store's relation spelled out row by row from the
+    ingest-ordered (labels, ts_ms, value) rows: the per-read row-list
+    render the segmented store replaced, kept as the reference."""
+    from shards_prometheus_spark.model import series_id_expr
+
+    data = []
+    for i, (labels, ts_ms, value) in enumerate(rows):
+        lbls = dict(labels)
+        metric = lbls.pop("__name__", "")
+        data.append(
+            (-(i + 1), metric, lbls, lbls.get("user"), ts_ms * 1_000,
+             float(value))
+        )
+    return spark.createDataFrame(
+        data,
+        "event_id long, metric string, labels map<string,string>, "
+        "label_user string, ts_us long, value double",
+    ).withColumn("series_id", series_id_expr("metric", "labels"))
+
+
+def _store_rows(df):
+    """Collected store rows, exact: value compared by its bits."""
+    return sorted(
+        (
+            r["event_id"], r["metric"], sorted(r["labels"].items()),
+            r["label_user"], r["ts_us"], struct.pack("<d", r["value"]),
+            r["series_id"],
+        )
+        for r in df.collect()
+    )
+
+
+def test_segmented_store_matches_row_render(spark):
+    """The store converts each read's new tail into one Arrow segment
+    and merges segments log-structured. Across interleaved 1.0 pushes,
+    2.0 pushes, OTLP ingest_rows and reads, every render equals the
+    row-by-row render of the rows ingested so far (event_id exactly
+    -1..-n in ingest order, series_id from series_id_expr, identical
+    ts_us/value bits), earlier renders do not change, n_rows counts
+    every row, and segment sizes halve oldest to newest."""
+    from shards_prometheus_spark.sources.otlp import (
+        encode_otlp_request,
+        parse_otlp_request,
+    )
+    from shards_prometheus_spark.sources.remote_write import (
+        V2_CONTENT_TYPE,
+        RemoteWriteReceiver,
+        encode_write_request,
+        encode_write_request_v2,
+        parse_write_request,
+        parse_write_request_v2,
+    )
+
+    rx = RemoteWriteReceiver()
+    empty = rx.samples(spark)
+    assert rx.n_rows == 0 and empty.count() == 0
+    assert empty.schema == _reference_render(spark, []).schema
+
+    ingested: list = []
+    renders: list = []
+    t0 = 1_700_000_000_000
+    for step, size in enumerate([1, 40, 7, 120, 3, 60, 2, 250, 9, 5]):
+        batch = [
+            (
+                {"__name__": f"m{(step + j) % 3}", "user": f"u{j % 4}",
+                 "job": "j" if j % 2 else "k"},
+                t0 + 1_000 * (step * 1_000 + j) - (j % 5) * 7,
+                _STALE_NAN if j == 3 else step * 0.5 - j,
+            )
+            for j in range(size)
+        ]
+        if step % 3 == 0:
+            payload = encode_write_request(batch)
+            rx.receive(payload)
+            ingested += parse_write_request(payload)
+        elif step % 3 == 1:
+            payload = encode_write_request_v2(batch)
+            rx.receive(payload, V2_CONTENT_TYPE)
+            ingested += parse_write_request_v2(payload)
+        else:
+            rows = parse_otlp_request(
+                encode_otlp_request(
+                    [
+                        {
+                            "name": f"otel.g{step}",
+                            "kind": "gauge",
+                            "points": [
+                                ({"user": lbls["user"]}, ts * 1_000_000, v)
+                                for lbls, ts, v in batch
+                            ],
+                        }
+                    ]
+                )
+            )
+            rx.ingest_rows(rows)
+            ingested += rows
+        assert rx.n_rows == len(ingested)
+        if step % 4 != 3:  # reads between some pushes, not all
+            renders.append((rx.samples(spark), list(ingested)))
+            assert rx.n_rows == len(ingested)
+            sizes = [t.num_rows for t, _df in rx._segments]
+            assert all(2 * new < old for old, new in zip(sizes, sizes[1:]))
+
+    final = rx.samples(spark)
+    assert _store_rows(final) == _store_rows(_reference_render(spark, ingested))
+    for df, rows in renders:  # snapshots: later pushes never leak in
+        assert _store_rows(df) == _store_rows(_reference_render(spark, rows))
+
+
+def test_segmented_store_concurrent_pushers_and_readers(spark):
+    """Concurrent ingest_rows and renders never lose or duplicate a
+    row: every render holds event_ids exactly -1..-m for a
+    non-decreasing m, and the final render holds every pushed row."""
+    import sys
+    import threading
+
+    from shards_prometheus_spark.sources.remote_write import (
+        RemoteWriteReceiver,
+    )
+
+    rx = RemoteWriteReceiver()
+    n_pushers, n_batches, batch = 3, 25, 8
+    done = threading.Event()
+    renders: "list[list]" = [[], []]
+
+    def push(p):
+        for b in range(n_batches):
+            rx.ingest_rows(
+                [
+                    ({"__name__": "c", "user": f"p{p}"}, b * batch + j,
+                     float(p * 10_000 + b * batch + j))
+                    for j in range(batch)
+                ]
+            )
+
+    def read(out):
+        while not done.is_set():
+            out.append(rx.samples(spark))
+
+    pushers = [threading.Thread(target=push, args=(p,)) for p in range(n_pushers)]
+    readers = [threading.Thread(target=read, args=(o,)) for o in renders]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads finely
+    try:
+        for t in readers + pushers:
+            t.start()
+        for t in pushers:
+            t.join(timeout=120)
+        done.set()
+        for t in readers:
+            t.join(timeout=120)
+    finally:
+        done.set()
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in readers + pushers)
+
+    total = n_pushers * n_batches * batch
+    assert rx.n_rows == total
+    final = rx.samples(spark).collect()
+    assert sorted(r["event_id"] for r in final) == list(range(-total, 0))
+    assert sorted(r["value"] for r in final) == sorted(
+        float(p * 10_000 + i)
+        for p in range(n_pushers)
+        for i in range(n_batches * batch)
+    )
+    for out in renders:
+        seen = 0
+        for df in out[:: max(1, len(out) // 6)]:
+            ids = sorted(r["event_id"] for r in df.select("event_id").collect())
+            assert ids == list(range(-len(ids), 0)) and len(ids) >= seen
+            seen = len(ids)
