@@ -5,8 +5,10 @@ local[$SPARK_GRAFT_CPUS] and prints:
 
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-followed by a compact summary line (`"summary_of": "previous_line"`)
-repeating the headline fields, so the total is recoverable from the
+followed by the per-query map again as minified parts of at most
+1 KB each (`"part"`/`"parts"`), then a compact summary line
+(`"summary_of": "previous_line"`) repeating the headline fields, so
+the per-query figures and the total are recoverable from the
 LAST bytes of stdout even under a fixed-size tail capture (the r9
 artifact lost its head — "value" leads the object — to exactly that).
 
@@ -248,6 +250,44 @@ def _parallel_probe(pool) -> float:
     return time.perf_counter() - t0
 
 
+#: byte budget of one per-query JSON line (a runner that keeps ~2 KB
+#: of stdout's tail then holds two parts plus the summary)
+_PART_BYTES = 1024
+
+
+def _query_parts(
+    timings: dict, total: float, sf, env_flagged: list
+) -> list[str]:
+    """The per-query map as minified JSON lines of <= `_PART_BYTES`
+    bytes each, in map order; every line carries `part`/`parts` so a
+    reader can tell which parts a truncated capture lost."""
+
+    def line(queries: dict, i: int, n: int) -> str:
+        return json.dumps(
+            {
+                "metric": "headline_queries_total_runtime",
+                "value": total,
+                "sf": sf,
+                "part": i,
+                "parts": n,
+                "queries": queries,
+                "env_flagged": env_flagged,
+            },
+            separators=(",", ":"),
+        )
+
+    chunks: list[dict] = [{}]
+    for name, val in timings.items():
+        # 99/99 stands in for the final part numbers (the widest they
+        # can be while the map stays under a hundred parts)
+        if chunks[-1] and len(line({**chunks[-1], name: val}, 99, 99)) > (
+            _PART_BYTES
+        ):
+            chunks.append({})
+        chunks[-1][name] = val
+    return [line(c, i + 1, len(chunks)) for i, c in enumerate(chunks)]
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     try:
@@ -448,30 +488,16 @@ def main() -> None:
             }
         )
     )
-    # Tail-capture-proof PER-QUERY line (r16, additions-only): the
-    # full artifact line above is ~3.4 KB and the driver's fixed-size
-    # tail capture (~3 KB) cuts its HEAD, so PERF_r15's per_query map
-    # and the whole scaling block came back empty even though the
-    # bench exited 0. Repeat the complete queries map — the SAME
-    # medians, byte-identical values — in one minified line whose
-    # size (~2.1 KB) plus the summary fits inside the capture, so the
-    # per-query artifact contract is recoverable from the final bytes
-    # of stdout. The full line above is unchanged; historical
-    # artifacts stay comparable.
-    print(
-        json.dumps(
-            {
-                "metric": "headline_queries_total_runtime",
-                "value": total,
-                "unit": "sec",
-                "sf": sf,
-                "queries": timings,
-                "env_flagged": env_flagged,
-                "compact_of": "full_artifact_line",
-            },
-            separators=(",", ":"),
-        )
-    )
+    # Tail-capture-proof PER-QUERY lines: the full artifact line above
+    # is ~3.4 KB and a ~2 KB tail capture of stdout cuts its HEAD;
+    # one compact ~2.1 KB line of the whole map still overflowed it.
+    # Repeat the complete queries map — the SAME medians, byte-identical
+    # values — as minified parts of at most 1 KB each, every part
+    # self-describing (`part` of `parts`), so the per-query artifact is
+    # recoverable from the final bytes of stdout part by part. The full
+    # line above is unchanged; historical artifacts stay comparable.
+    for part in _query_parts(timings, total, sf, env_flagged):
+        print(part)
     # Tail-capture-proof summary LAST: BENCH_r09.json lost its own
     # headline total because the driver's fixed-size tail capture cut
     # the long JSON line's head ("value" leads the object). The totals

@@ -116,6 +116,8 @@ def parallelism_floor(
       byte-identical.
     - above one split's worth per core the scan already parallelizes
       — plan unchanged (a 100 TB table yields thousands of splits).
+      A directory table counts one split per file at least, so many
+      mid-size parts leave the plan unchanged too.
 
     In between — a single-digit-GB single-file table, the sf3-scale
     rehearsal shape — round-robin repartition to the core count; the
@@ -126,28 +128,29 @@ def parallelism_floor(
     sc = spark.sparkContext
     path = f"{sf_dir}/{table}.parquet"
     try:
-        if os.path.isdir(path):
-            # multi-file table (e.g. the rehearsal dirs): the scan
-            # splits per file already; size the gate on the LARGEST
-            # part, the serial unit a single-split kernel binds on
-            size = max(
-                (
-                    os.path.getsize(os.path.join(path, f))
-                    for f in os.listdir(path)
-                    if f.endswith(".parquet")
-                ),
-                default=0,
-            )
+        is_dir = os.path.isdir(path)
+        if is_dir:
+            # multi-file table (e.g. the rehearsal dirs): the lower gate
+            # sizes the LARGEST part, the serial unit a single-split
+            # kernel binds on
+            sizes = [
+                os.path.getsize(os.path.join(path, f))
+                for f in os.listdir(path)
+                if f.endswith(".parquet")
+            ]
         else:
-            size = os.path.getsize(path)
+            sizes = [os.path.getsize(path)]
     except OSError:
         return df
-    if size < _FLOOR_MIN_BYTES:
+    if max(sizes, default=0) < _FLOOR_MIN_BYTES:
         return df
-    # one split per ~128 MB (the maxPartitionBytes default): if the
-    # file cannot produce cores/2 splits, the kernel is effectively
-    # serial — apply the floor
-    if size >= 64 * 1024 * 1024 * max(2, sc.defaultParallelism):
+    # one split per ~128 MB (the maxPartitionBytes default), and a
+    # directory splits per file at least: if the scan cannot produce
+    # cores/2 splits, the kernel is effectively serial — apply the floor
+    splits = sum(sizes) / (128 * 1024 * 1024)
+    if is_dir:
+        splits = max(splits, len(sizes))
+    if splits >= max(2, sc.defaultParallelism) / 2:
         return df
     return df.repartition(sc.defaultParallelism)
 

@@ -2145,10 +2145,11 @@ class MetricsExposer:
             # FRESH evaluator per request, t_max from the from_dir
             # memo (one corpus scan per (app, sf_dir), not per
             # request). A shared cached instance raced under the
-            # ThreadingHTTPServer: plan construction mutates
-            # _gridf/_gspan (the _subquery save/set/restore), so two
-            # concurrent subquery-bearing requests could build plans
-            # against each other's grids. from_dir also restores the
+            # ThreadingHTTPServer: plan construction sets the
+            # evaluator's active grid (and a subquery swaps in its
+            # inner grid while compiling), so two concurrent requests
+            # could build plans against each other's grids. from_dir
+            # also restores the
             # clear_caches() convention: rewrite a dir in place →
             # clear_caches releases the t_max memo, where the old
             # exposer-lifetime cache served a stale pin forever.

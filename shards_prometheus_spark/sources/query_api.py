@@ -17,7 +17,9 @@ reference + its scraper": a Grafana-shaped client can now point at
 
 Response format follows the public API (`status`/`data`,
 `resultType` vector|matrix|scalar, `[unix_seconds, "value"]` pairs,
-`errorType`/`error` on failure). `query_range` evaluates at
+`errorType`/`error` on failure). Both queries run through the one
+PromQL evaluator. `query` is the one-point grid at the evaluation
+time (`PromQLEvaluator.eval_instant_map`). `query_range` evaluates at
 `start, start+step, …, ≤ end` inclusive of `start` — upstream's own
 grid, carried through `PromQLEvaluator.eval_range_map_at`, so even
 hand-built unaligned requests get the request's exact arithmetic

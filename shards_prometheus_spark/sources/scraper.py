@@ -1030,7 +1030,7 @@ def scraped_with_staleness(scraped: DataFrame) -> DataFrame:
     relation upstream's TSDB actually stores. Real samples carry
     ``stale = false``; every downstream selector
     (`registry_from_scrapes`, `MetricsRegistry.instant`, the PromQL
-    evaluator's instant path) keys on the column when present."""
+    evaluator's instant-selector pick) keys on the column when present."""
     base = scraped
     if "stale" not in base.columns:
         base = base.withColumn("stale", F.lit(False))

@@ -700,3 +700,49 @@ def test_scalar_self_agg_threshold_single_evaluation(spark):
     # by the alert_rules* oracle rows; here just require a non-empty
     # firing set so the plan assertions aren't vacuous)
     assert len(inst.collect()) > 0
+
+
+def _exchange_nodes(plan: str) -> int:
+    """Exchange nodes (shuffle and broadcast) in a formatted plan —
+    each node's detail header, e.g. `(4) Exchange`."""
+    import re
+
+    return len(re.findall(r"^\(\d+\) \w*Exchange\b", plan, re.M))
+
+
+def test_instant_promql_leaf_has_no_grid_join(spark):
+    """An instant query is the one-point grid: each leaf filters the
+    literal window and attaches the instant as a literal column, so no
+    BroadcastNestedLoopJoin against a grid relation is left."""
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+    )
+    from shards_prometheus_spark.model import samples_multi
+    from shards_prometheus_spark.plans import formatted_plan
+
+    ev = PromQLEvaluator(samples_multi(spark, SF_SMOKE))
+    plan = formatted_plan(
+        ev.eval_instant_map("sum by (shard) (rate(click[1h]))")
+    )
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_instant_subquery_exchange_count(spark):
+    """At one outer point a subquery needs no (outer × inner) mapping
+    join, and a series-leaf inner folds on its own series clustering:
+    the instant plan keeps the 2 exchange nodes (the lag window's hash
+    exchange and the broadcast inner grid) that the dedicated instant
+    subquery path planned, at both smoke and oracle scale."""
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+    )
+    from shards_prometheus_spark.model import samples_multi
+    from shards_prometheus_spark.plans import formatted_plan
+    from tests.conftest import SF_ORACLE
+
+    for sf in (SF_SMOKE, SF_ORACLE):
+        ev = PromQLEvaluator(samples_multi(spark, sf))
+        plan = formatted_plan(
+            ev.eval_instant_map("max_over_time(rate(click[1h])[6h:30m])")
+        )
+        assert _exchange_nodes(plan) <= 2

@@ -2302,3 +2302,104 @@ def test_info_syntax_and_format(spark):
     ev = _info_fixture(spark)
     with pytest.raises(PromQLSyntaxError):
         ev.eval('info(m, {__name__=~"target.*"})')
+
+
+def _registered_promql_exprs() -> list[str]:
+    """Every registered `PROMQL_*` expression string, deduplicated."""
+    from shards_prometheus_spark.functions import promql_parser as pp
+
+    seen: dict[str, str] = {}
+    for name in sorted(dir(pp)):
+        val = getattr(pp, name)
+        if name.startswith("PROMQL_") and isinstance(val, str):
+            seen.setdefault(val, name)
+    return list(seen)
+
+
+#: shapes the registry lacks: offset, @, absent, scalar()/time()
+#: arithmetic, timestamp(), bare and le-filtered `_bucket` selectors,
+#: simple and composed subqueries, topk with and without by,
+#: count_values
+_EQUIV_EXTRA = [
+    "click offset 1h",
+    "sum by (user) (rate(click[2h] offset 30m))",
+    "click @ end()",
+    "sum by (user) (increase(click[240h] @ start()))",
+    "max_over_time(click[6h:1h] @ start())",
+    "absent(click)",
+    'absent(nosuch{job="api"})',
+    "absent(view_bucket)",
+    "absent(sum by (user) (click) > 1e9)",
+    "absent_over_time(click[1h])",
+    "absent_over_time(nosuch[1h])",
+    "click > scalar(avg(click))",
+    "click * scalar(sum(view))",
+    "click - time() / 1e6",
+    "time() - 3600",
+    "scalar(sum(click)) * 2 + time()",
+    "vector(time())",
+    "timestamp(click)",
+    "timestamp(sum by (user) (click))",
+    "view_bucket",
+    'view_bucket{le="50"}',
+    "max_over_time(click[6h:1h])",
+    "max_over_time(rate(click[1h])[6h:30m])",
+    "avg_over_time(sum by (user) (rate(click[2h]))[6h:1h])",
+    "rate(sum by (user) (count_over_time(click[1h]))[6h:1h])",
+    "topk(3, click)",
+    "topk by (shard) (2, click)",
+    "bottomk(2, sum by (user) (click))",
+    'count_values("v", click)',
+]
+
+
+@pytest.fixture(scope="module")
+def equiv_ev(spark):
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+    )
+
+    return PromQLEvaluator(samples_multi(spark, SF_SMOKE))
+
+
+@pytest.mark.parametrize(
+    "expr", _registered_promql_exprs() + _EQUIV_EXTRA
+)
+def test_instant_equals_grid_slice(equiv_ev, expr):
+    """An instant query at t is the t-instant of a range query ending
+    at t: `eval_instant_map(q)` must equal the t slice of
+    `eval_range_map_at(q, t - 2*step, t, step)` (upstream defines a
+    range query as the instant query at each step). `@ start()`
+    resolves to the range start, so those queries compare the first
+    instant instead, against an instant query evaluated there."""
+    import math
+
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+    )
+
+    ev = equiv_ev
+    end = ev.eval_time_us()
+    step = 3_600_000_000
+    start = end - 2 * step
+    t = end
+    if "start()" in expr:
+        t = start
+        ev = PromQLEvaluator(equiv_ev.samples, eval_ts_us=t)
+
+    def norm(rows):
+        return sorted(
+            (
+                tuple(sorted((r["labels"] or {}).items())),
+                "nan" if math.isnan(r["value"]) else r["value"],
+            )
+            for r in rows
+        )
+
+    inst = norm(ev.eval_instant_map(expr).collect())
+    grid = norm(
+        r
+        for r in equiv_ev.eval_range_map_at(expr, start, end, step).collect()
+        if r["ts_us"] == t
+    )
+    assert inst == grid

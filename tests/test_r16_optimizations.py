@@ -323,3 +323,47 @@ def test_parallelism_floor_byte_gate(spark, monkeypatch):
         _os.path, "getsize", lambda p: 1024 * 1024 * 1024 * 1024
     )
     assert parallelism_floor(spark, SF_SMOKE, df) is df
+
+
+def test_parallelism_floor_split_count_gate(spark, tmp_path):
+    """A directory table of many mid-size parts already scans in
+    cores/2 splits or more, so the floor adds no round-robin exchange;
+    one large part alone, in a directory or as a single file, still
+    gets the floor, at 2 cores too. The parts are sparse files: only
+    their sizes matter to the gate, and only the core count matters of
+    the session, so `cores` stands in for it."""
+    import os as _os
+    from types import SimpleNamespace
+
+    from shards_prometheus_spark.model import (
+        parallelism_floor,
+        samples_multi,
+    )
+    from shards_prometheus_spark.plans import formatted_plan
+
+    df = samples_multi(spark, SF_SMOKE)
+    mb = 1024 * 1024
+
+    def sparse(path, size):
+        path.parent.mkdir(parents=True, exist_ok=True)
+        with open(path, "wb") as f:
+            _os.truncate(f.fileno(), size)
+
+    def floored(sf_dir, n_cores):
+        cores = SimpleNamespace(
+            sparkContext=SimpleNamespace(defaultParallelism=n_cores)
+        )
+        out = parallelism_floor(cores, str(sf_dir), df)
+        return "RoundRobinPartitioning" in formatted_plan(out)
+
+    many = tmp_path / "many" / "events.parquet"
+    for i in range(8):
+        sparse(many / f"part-{i}.parquet", 100 * mb)
+    assert not floored(tmp_path / "many", 8)
+
+    sparse(tmp_path / "one" / "events.parquet" / "part-0.parquet", 100 * mb)
+    assert floored(tmp_path / "one", 8)
+
+    sparse(tmp_path / "file" / "events.parquet", 100 * mb)
+    assert floored(tmp_path / "file", 8)
+    assert floored(tmp_path / "file", 2)

@@ -749,6 +749,7 @@ def test_serve_scraped_config_end_to_end(spark):
     re-exposes the scraped registry for a downstream federation
     hop."""
     import json
+    import math
     import time as _time
     import urllib.request
     from urllib.parse import quote
@@ -778,9 +779,24 @@ def test_serve_scraped_config_end_to_end(spark):
     t2 = MetricsExposer(spark, SF_SMOKE, lines_fn=lines_fn).start()
     srv = None
     try:
+        # Each target scrape renders /metrics through a Spark job, so
+        # its cost follows the host's speed. The scrape timeout is
+        # clamped to scrape_interval: derive the interval from the
+        # slowest of a few warm direct scrapes, with a 4x margin, and
+        # scale the tick budget's deadline with it.
+        def scrape_s(t) -> float:
+            t0 = _time.perf_counter()
+            with urllib.request.urlopen(
+                f"http://{t.host}:{t.port}/metrics", timeout=120
+            ) as r:
+                r.read()
+            return _time.perf_counter() - t0
+
+        cost = max(scrape_s(t) for t in (t1, t2, t1, t2))
+        interval_s = max(1, math.ceil(4 * cost))
         cfg = f"""
 global:
-  scrape_interval: 1s
+  scrape_interval: {interval_s}s
 scrape_configs:
   - job_name: demo
     static_configs:
@@ -791,7 +807,11 @@ scrape_configs:
         # several ticks: a timed-out scrape under load is DATA (up 0)
         # since r13, and the next tick is the retry
         srv = serve_scraped_config(
-            spark, cfg, SF_SMOKE, max_ticks=6, trigger_seconds=1.0
+            spark,
+            cfg,
+            SF_SMOKE,
+            max_ticks=6,
+            trigger_seconds=float(interval_s),
         )
         base = f"http://{srv.exposer.host}:{srv.exposer.port}"
 
@@ -804,7 +824,7 @@ scrape_configs:
         # window may answer the 422 execution envelope)
         import urllib.error
 
-        deadline = _time.time() + 240
+        deadline = _time.time() + 240 * interval_s
         while _time.time() < deadline:
             try:
                 res = api(f"/api/v1/query?query={quote('up')}")["data"][

@@ -236,6 +236,21 @@ def test_evaluator_grid_stale_cut(spark):
     # b: live at 10..20s, cut at 25s (marker) and 30s (marker is
     # still the newest in-lookback sample)
     assert by_series["user=b"] == {10 * _US, 15 * _US, 20 * _US}
+    # timestamp() and absent() take the same pick: no timestamp for b
+    # once its marker is the newest sample, and b is absent there
+    ts_b = {
+        r["ts_us"]
+        for r in ev.eval_range("timestamp(up)", 25 * _US, 5 * _US).collect()
+        if r["labels"] == "user=b"
+    }
+    assert ts_b == {10 * _US, 15 * _US, 20 * _US}
+    gone = {
+        r["ts_us"]
+        for r in ev.eval_range(
+            'absent(up{user="b"})', 25 * _US, 5 * _US
+        ).collect()
+    }
+    assert gone == {25 * _US, 30 * _US}
 
 
 class _TickServer:
