@@ -1284,6 +1284,35 @@ class _Grid:
         return self.build()
 
 
+def data_time_us(samples: DataFrame) -> int:
+    """The default evaluation time of a samples relation: its max
+    `ts_us`, one collect of a 1-row aggregate. An EMPTY relation pins
+    0, so every selector window is simply empty (queries return no
+    rows) instead of int(None) raising."""
+    t_max = samples.agg(F.max("ts_us")).collect()[0][0]
+    return 0 if t_max is None else int(t_max)
+
+
+def dir_time_us(spark: SparkSession, sf_dir: str) -> int:
+    """`data_time_us` of a batch dir's samples, memoized per
+    (app, sf_dir): the test/store dirs are immutable, and the eager
+    max(ts_us) collect is otherwise a full corpus scan on EVERY
+    evaluator construction — once per PromQL query, twice the read
+    volume a query needs. Shares the Tier C count cache, so
+    clear_caches() releases it with every other memo (rewrite a dir
+    in place → clear_caches, the existing convention)."""
+    from shards_prometheus_spark.operators.tierc_common import (
+        _COUNT_CACHE,
+    )
+
+    key = (spark.sparkContext.applicationId, sf_dir, "promql_t_max")
+    t_max = _COUNT_CACHE.get(key)
+    if t_max is None:
+        t_max = data_time_us(samples_multi(spark, sf_dir))
+        _COUNT_CACHE[key] = t_max
+    return t_max
+
+
 class PromQLEvaluator:
     """Compile PromQL ASTs against the multi-label samples relation.
 
@@ -1314,15 +1343,7 @@ class PromQLEvaluator:
         # real cluster: checkpoint blocks are executor-resident state,
         # a collected scalar is not.
         if eval_ts_us is None:
-            row = samples.agg(F.max("ts_us").alias("t_max")).collect()[0]
-            eval_ts_us = row["t_max"]
-            if eval_ts_us is None:
-                # max(ts_us) of an EMPTY relation collects NULL; pin
-                # t_max to 0 so every selector window is simply empty
-                # (queries return no rows), matching the pre-literal
-                # behavior where the null t_max flowed through the
-                # broadcast join — instead of int(None) raising.
-                eval_ts_us = 0
+            eval_ts_us = data_time_us(samples)
         self._tmax_us = int(eval_ts_us)
         self._tmax = samples.sparkSession.createDataFrame(
             [(eval_ts_us,)], "t_max bigint"
@@ -1344,25 +1365,11 @@ class PromQLEvaluator:
     @classmethod
     def from_dir(cls, spark: SparkSession, sf_dir: str) -> "PromQLEvaluator":
         """Evaluator over a batch dir, with t_max memoized per
-        (app, sf_dir): the test/store dirs are immutable, and the
-        eager max(ts_us) collect is otherwise a full corpus scan on
-        EVERY evaluator construction — once per PromQL query, twice
-        the read volume a query needs. Shares the Tier C count cache,
-        so clear_caches() releases it with every other memo (rewrite
-        a dir in place → clear_caches, the existing convention)."""
-        from shards_prometheus_spark.operators.tierc_common import (
-            _COUNT_CACHE,
+        (app, sf_dir) — see `dir_time_us`."""
+        return cls(
+            samples_multi(spark, sf_dir),
+            eval_ts_us=dir_time_us(spark, sf_dir),
         )
-
-        key = (spark.sparkContext.applicationId, sf_dir, "promql_t_max")
-        samples = samples_multi(spark, sf_dir)
-        t_max = _COUNT_CACHE.get(key)
-        if t_max is None:
-            t_max = samples.agg(F.max("ts_us").alias("t_max")).collect()[
-                0
-            ]["t_max"]
-            _COUNT_CACHE[key] = t_max
-        return cls(samples, eval_ts_us=t_max)
 
     # -- selectors -------------------------------------------------------
     def _matched(

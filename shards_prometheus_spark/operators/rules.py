@@ -15,11 +15,20 @@ what that server runs against the scraped store).
   every SF) and an `absent()` liveness alert (fires while the probed
   metric has no samples — the standard dead-exporter page).
 
+One rule path: `eval_rule_file` is the only code that evaluates a rule
+group — a user's rules.yml, the built-in groups (`BUILTIN_RULE_FILE`,
+generated from the rule constants below) and the registered
+`rules_chained` / `rules_from_file` queries all go through it, and the
+ALERTS / ALERTS_FOR_STATE series derive from the same pass. The
+per-kind builders (`eval_rule_group`, `eval_alert_for_group`,
+`eval_alert_keep_group`) are its building blocks; the registered
+`recording_rules` / `alert_rules*` queries call them directly.
+
 Scale shape: each rule is one evaluator plan (one scan per selector
-leaf joined to broadcast t_max); the union is plan-level, not a
-driver loop over collected results. Rule GROUPS evaluate independently
-— on a cluster each group is its own job, exactly how a Prometheus
-server schedules them.
+leaf; the evaluation time is a literal column); the union is
+plan-level, not a driver loop over collected results. Rule GROUPS
+evaluate independently — on a cluster each group is its own job,
+exactly how a Prometheus server schedules them.
 """
 
 from __future__ import annotations
@@ -47,10 +56,12 @@ from shards_prometheus_spark.functions.promql_parser import (
     _grid_cte,
     _grid_increase_cte,
     _increase_cte,
+    data_time_us,
     parse,
 )
 from shards_prometheus_spark.functions.labelset import label_str
 from shards_prometheus_spark.model import dround
+from shards_prometheus_spark.operators.tierc_common import _memo_persist
 
 #: (record_name, expr) — the Prometheus `record:` rule group.
 RECORDING_RULES: list[tuple[str, str]] = [
@@ -107,81 +118,6 @@ CHAINED_RULE_GROUP: list[tuple[str, str, str]] = [
         "scalar(avg(user:click:rate720h:daily))",
     ),
 ]
-
-
-def eval_rule_group_chained(
-    samples: DataFrame,
-    rules: list[tuple[str, str, str]],
-    memo_key: str | None = None,
-    eval_ts_us: int | None = None,
-) -> DataFrame:
-    """Sequential (layered) rule-group evaluation — the upstream
-    semantics `eval_rule_group` lacked (VERDICT r8 missing #2): rules
-    in a group evaluate in order at ONE shared tick, and each
-    `record:` rule's output vector is written back into the store
-    before the next rule runs, so later rules can select earlier
-    record names.
-
-    Batch restatement: after each record rule, its vector becomes a
-    samples relation (metric = record name, ts_us = the tick, one
-    sample per series) unioned onto the store, and the next rule
-    evaluates over the augmented relation via a fresh evaluator pinned
-    at the same tick. The union is plan-level — layer N's plan embeds
-    layer N-1's (Spark reuses the identical exchange subtrees within
-    the one job); a production scheduler materializes each layer back
-    to the parquet store exactly as Prometheus writes records to its
-    TSDB, so the lazy cascade here is the single-tick closure, not
-    the steady-state plan.
-
-    Returns (rule, labels, value): every record's vector plus every
-    alert's firing set, each labeled with its rule name.
-
-    `memo_key` (immutable batch dirs only): each record's vector-sized
-    relation is persisted through the Tier C memo LRU — the batch
-    analog of materializing records back to the store, without which
-    layer N's lazy plan re-runs every earlier layer per reference
-    (released by clear_caches, one copy per (app, key, rule))."""
-    from shards_prometheus_spark.functions.labelset import label_str
-
-    ev = PromQLEvaluator(samples, eval_ts_us=eval_ts_us)
-    tick_us = ev.eval_time_us()
-    parts = []
-    for kind, name, expr in rules:
-        vec = ev.eval_instant_map(expr)
-        if kind == "record" and memo_key is not None:
-            from shards_prometheus_spark.operators.tierc_common import (
-                _memo_persist,
-            )
-
-            vec = _memo_persist(
-                samples.sparkSession,
-                memo_key,
-                f"chain_rec_{name}",
-                lambda v=vec: v,
-            )
-        parts.append(
-            vec.select(
-                F.lit(name).alias("rule"),
-                label_str("labels").alias("labels"),
-                "value",
-            )
-        )
-        if kind == "record":
-            sid = F.xxhash64(F.lit(name), label_str("labels"))
-            rec = vec.select(
-                sid.alias("event_id"),
-                sid.alias("series_id"),
-                F.lit(name).alias("metric"),
-                F.col("labels"),
-                F.lit(tick_us).alias("ts_us"),
-                F.col("value").cast("double").alias("value"),
-            )
-            samples = samples.unionByName(rec)
-            ev = PromQLEvaluator(samples, eval_ts_us=tick_us)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 #: (alertname, expr, for_us, step_us) — alert rules with a `for:` hold
@@ -509,50 +445,6 @@ def _alert_run_stats(
     )
 
 
-def alert_state_series(
-    ev: PromQLEvaluator,
-    rules: "list[tuple[str, str, int, int]]",
-    name_col: str = "alertname",
-) -> DataFrame:
-    """The queryable alert-state series upstream records into its
-    TSDB on every rule evaluation (rules/alerting.go QueryForState /
-    sample()): for each ACTIVE alert (expression true at the latest
-    evaluation instant T),
-
-    - ``ALERTS{alertname, alertstate="pending"|"firing", …labels}=1``
-      — firing iff ``T - ActiveAt >= for`` (a zero `for:` fires
-      immediately), pending otherwise;
-    - ``ALERTS_FOR_STATE{alertname, …labels} = ActiveAt`` seconds —
-      the restart-persistence series (no alertstate label upstream).
-
-    `rules`: (alertname, expr, for_us, step_us). Returns (alertname,
-    labels MAP, alertstate, active_at_us, value) — one row per active
-    alert; callers shape it into the samples relation or the parity
-    row. One grid pass per rule, plan-level union."""
-    parts = []
-    for name, expr, for_us, step_us in rules:
-        st = _alert_run_stats(
-            ev, expr, step_us, for_us + step_us
-        ).filter(F.col("last_true_us") == F.col("_T"))
-        state = F.when(
-            F.col("_T") - F.col("active_at_us") >= F.lit(for_us),
-            F.lit("firing"),
-        ).otherwise(F.lit("pending"))
-        parts.append(
-            st.select(
-                F.lit(name).alias(name_col),
-                "labels",
-                state.alias("alertstate"),
-                "active_at_us",
-                "value",
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
 #: (alertname, expr, for_us, keep_firing_for_us, step_us) — alert rules
 #: with BOTH a `for:` hold and a `keep_firing_for:` grace window (public
 #: Prometheus surface since 2.42): once FIRING, the alert keeps firing
@@ -742,9 +634,29 @@ class RuleLimitError(Exception):
     this message; the batch single-pass evaluation raises it."""
 
 
+def _with_static_labels(labels, static: dict):
+    """A rule's static labels merged OVER a series' label map (upstream:
+    rule labels override series labels and are part of the output's
+    identity); the map column unchanged when the rule has none."""
+    if not static:
+        return labels
+    keys = list(static)
+    return F.map_concat(
+        F.map_filter(
+            labels,
+            lambda k, _v: ~k.isin(*keys) if len(keys) > 1 else k != keys[0],
+        ),
+        F.create_map(
+            *[F.lit(x) for kv in sorted(static.items()) for x in kv]
+        ),
+    )
+
+
 def eval_rule_file(
     samples: DataFrame,
     text: str,
+    memo_key: str | None = None,
+    eval_ts_us: int | None = None,
     _state_rows: "list | None" = None,
 ) -> DataFrame:
     """Evaluate a Prometheus rule FILE against a samples relation the
@@ -763,15 +675,31 @@ def eval_rule_file(
     identity) and template-expands labels + annotations per firing
     series.
 
+    Write-back: after each record rule, its vector becomes a samples
+    relation (metric = record name, ts_us = the tick, one sample per
+    series) unioned onto the group's store, and the next rule
+    evaluates over the augmented relation through a fresh evaluator
+    pinned at the same tick. The union is plan-level — layer N's plan
+    embeds layer N-1's; a production scheduler materializes each layer
+    back to its store exactly as Prometheus writes records to its
+    TSDB, so the lazy cascade here is the single-tick closure.
+
     Returns (grp, kind, rule, labels, value): every record's vector
     and every firing alert, labeled with its group and rule name.
+
+    `eval_ts_us`: the evaluation time ("now") every group's tick
+    derives from; default the data's max timestamp (one collect per
+    call). `memo_key` (immutable batch dirs only): each record's
+    vector is persisted through the Tier C memo LRU — the batch analog
+    of materializing records back to the store, without which layer
+    N's lazy plan re-runs every earlier layer per reference (released
+    by clear_caches, one copy per (app, key, group, rule)).
 
     `_state_rows` (internal, see rule_file_alert_state_samples): a
     list that, when passed, collects one DataFrame per ALERT rule of
     (alertname, labels MAP incl. the rule's static labels,
     alertstate pending|firing, active_at_us, ts_us) — every ACTIVE
     alert, not just the firing set."""
-    from shards_prometheus_spark.functions.labelset import label_str
 
     def _enforce_limit(df: DataFrame, limit: int, rname: str, gname: str):
         """Upstream's group `limit:`: cap the rule's output
@@ -787,45 +715,37 @@ def eval_rule_file(
                     f"rule {rname!r} in group {gname!r}"
                 )
 
+    if eval_ts_us is None:
+        eval_ts_us = data_time_us(samples)
     parts = []
     for g in load_rule_groups(text):
         gsamples = samples
-        ev = PromQLEvaluator(gsamples)
-        tick_us = ev.eval_time_us()
-        if g.get("query_offset_us"):
-            # upstream ≥2.53: the whole group evaluates at
-            # ts - query_offset — queries AND the recorded samples'
-            # timestamps shift (rules/group.go evaluates the vector
-            # at ts.Add(-queryOffset), and the result samples carry
-            # that shifted eval time)
-            tick_us -= g["query_offset_us"]
-            ev = PromQLEvaluator(gsamples, eval_ts_us=tick_us)
+        # upstream ≥2.53 `query_offset:`: the whole group evaluates at
+        # ts - query_offset — queries AND the recorded samples'
+        # timestamps shift (rules/group.go evaluates the vector at
+        # ts.Add(-queryOffset), and the result samples carry that
+        # shifted eval time)
+        tick_us = eval_ts_us - g["query_offset_us"]
+        ev = PromQLEvaluator(gsamples, eval_ts_us=tick_us)
         step_us = g["interval_us"]
+        gcol = F.lit(g["name"]).alias("grp")
         for r in g["rules"]:
-            gcol = F.lit(g["name"]).alias("grp")
             kcol = F.lit(r["kind"]).alias("kind")
             if r["kind"] == "record":
                 vec = ev.eval_instant_map(r["expr"])
                 if r["labels"]:
-                    static = F.create_map(
-                        *[
-                            F.lit(x)
-                            for kv in sorted(r["labels"].items())
-                            for x in kv
-                        ]
-                    )
-                    keys = list(r["labels"])
                     vec = vec.select(
-                        F.map_concat(
-                            F.map_filter(
-                                F.col("labels"),
-                                lambda k, _v: ~k.isin(*keys)
-                                if len(keys) > 1
-                                else k != keys[0],
-                            ),
-                            static,
+                        _with_static_labels(
+                            F.col("labels"), r["labels"]
                         ).alias("labels"),
                         "value",
+                    )
+                if memo_key is not None:
+                    vec = _memo_persist(
+                        samples.sparkSession,
+                        memo_key,
+                        f"rule_rec_{g['name']}_{r['name']}_{tick_us}",
+                        lambda v=vec: v,
                     )
                 _enforce_limit(vec, g["limit"], r["name"], g["name"])
                 parts.append(
@@ -884,19 +804,32 @@ def _alert_rule_states(
     ev: PromQLEvaluator, r: dict, step_us: int, tick_us: int
 ) -> DataFrame:
     """One alert rule's ACTIVE set with state, for the ALERTS /
-    ALERTS_FOR_STATE write-back: run statistics over the rule's own
-    hold span; `keep_firing_for:` rules mark the grace-held set
-    firing (eval_alert_keep_group is the single source of keep
-    truth), a plain `for:`/instant rule fires iff its current run
-    covers the hold. The rule's static labels merge OVER series
-    labels (upstream: rule labels are part of alert identity)."""
+    ALERTS_FOR_STATE write-back, at the group tick `tick_us` (the
+    evaluator's pinned time):
+
+    - no `for:` and no `keep_firing_for:` — the expression's instant
+      vector at the tick, the same vector the firing set is: every
+      member fires at once, ActiveAt = the tick;
+    - `keep_firing_for:` — run statistics over the rule's own hold
+      span, the grace-held set firing (eval_alert_keep_group is the
+      single source of keep truth), the rest of the current runs
+      pending;
+    - `for:` — run statistics over the hold span: firing iff the
+      current run covers the hold (``T - ActiveAt >= for``), pending
+      otherwise.
+
+    The rule's static labels merge OVER series labels (upstream: rule
+    labels are part of alert identity)."""
     for_us, keep_us = r["for_us"], r["keep_us"]
-    if keep_us:
-        span = for_us + keep_us + 4 * step_us
-    else:
-        span = for_us + step_us
-    stats = _alert_run_stats(ev, r["expr"], step_us, span)
-    if keep_us:
+    if not for_us and not keep_us:
+        active = ev.eval_instant_map(r["expr"]).withColumn(
+            "active_at_us", F.lit(tick_us)
+        )
+        state = F.lit("firing")
+    elif keep_us:
+        stats = _alert_run_stats(
+            ev, r["expr"], step_us, for_us + keep_us + 4 * step_us
+        )
         keep = eval_alert_keep_group(
             ev,
             [(r["name"], r["expr"], for_us, keep_us, step_us)],
@@ -913,35 +846,16 @@ def _alert_rule_states(
             F.col("_kk").isNotNull(), F.lit("firing")
         ).otherwise(F.lit("pending"))
     else:
-        active = stats.filter(
-            F.col("last_true_us") == F.col("_T")
-        )
+        active = _alert_run_stats(
+            ev, r["expr"], step_us, for_us + step_us
+        ).filter(F.col("last_true_us") == F.col("_T"))
         state = F.when(
             F.col("_T") - F.col("active_at_us") >= F.lit(for_us),
             F.lit("firing"),
         ).otherwise(F.lit("pending"))
-    labels_col = F.col("labels")
-    if r["labels"]:
-        static = F.create_map(
-            *[
-                F.lit(x)
-                for kv in sorted(r["labels"].items())
-                for x in kv
-            ]
-        )
-        keys = list(r["labels"])
-        labels_col = F.map_concat(
-            F.map_filter(
-                F.col("labels"),
-                lambda k, _v: ~k.isin(*keys)
-                if len(keys) > 1
-                else k != keys[0],
-            ),
-            static,
-        )
     return active.select(
         F.lit(r["name"]).alias("alertname"),
-        labels_col.alias("labels"),
+        _with_static_labels(F.col("labels"), r["labels"]).alias("labels"),
         state.alias("alertstate"),
         "active_at_us",
         F.lit(tick_us).alias("ts_us"),
@@ -949,7 +863,7 @@ def _alert_rule_states(
 
 
 def rule_file_alert_state_samples(
-    samples: DataFrame, text: str
+    samples: DataFrame, text: str, eval_ts_us: int | None = None
 ) -> "DataFrame | None":
     """The queryable alert-state series upstream's rule manager
     writes into its TSDB on every evaluation (rules/alerting.go):
@@ -961,16 +875,20 @@ def rule_file_alert_state_samples(
 
     rendered in the engine's §1.2 samples-relation shape so the read
     API can serve ``ALERTS{alertstate="firing"}`` — the documented
-    Grafana alert-history pattern. Rides the SAME eval_rule_file
-    spine as `/api/v1/alerts` (record chaining, query_offset, static
-    labels included), so the two views cannot drift. None when the
-    file has no alert rules. Cold-evaluation convention: ActiveAt
-    clamps to the rule's hold window start, like every hold
-    evaluation here (a restarted upstream server does the same)."""
+    Grafana alert-history pattern. Rides the same eval_rule_file
+    pass as `/api/v1/alerts` (record chaining, query_offset, static
+    labels included) at the same group ticks: evaluated at the same
+    `eval_ts_us` (default the data's max timestamp), the firing
+    ALERTS series are exactly the alerts that endpoint serves —
+    tests/test_rules.py pins that for every alert rule of
+    DEMO_RULE_FILE, `for:`-less rules included. None when the file
+    has no alert rules. Cold-evaluation convention: ActiveAt clamps
+    to the rule's hold window start, like every hold evaluation here
+    (a restarted upstream server does the same)."""
     from shards_prometheus_spark.model import series_id_expr
 
     rows: list = []
-    eval_rule_file(samples, text, _state_rows=rows)
+    eval_rule_file(samples, text, eval_ts_us=eval_ts_us, _state_rows=rows)
     if not rows:
         return None
     st = rows[0]
@@ -1017,6 +935,75 @@ def rule_file_alert_state_samples(
     )
 
 
+def _rule_file_text(*groups: dict) -> str:
+    """Rule-file YAML for group dicts in the public file shape."""
+    import yaml
+
+    return yaml.safe_dump(
+        {"groups": list(groups)}, sort_keys=False, width=1 << 16
+    )
+
+
+def _seconds(us: int) -> str:
+    """µs → a rule-file duration token."""
+    return f"{us // 1_000_000}s"
+
+
+def _group_step(rules: list[tuple]) -> str:
+    """The one evaluation interval a group's rules share (the step,
+    each rule's last field) as a duration token."""
+    (step_us,) = {r[-1] for r in rules}
+    return _seconds(step_us)
+
+
+_CHAINED_GROUP = {
+    "name": "recording_chained",
+    "rules": [
+        {kind: name, "expr": expr} for kind, name, expr in CHAINED_RULE_GROUP
+    ],
+}
+
+#: the layered group as a rule FILE — what `rules_chained` evaluates
+CHAINED_RULE_FILE = _rule_file_text(_CHAINED_GROUP)
+
+#: the built-in groups as ONE rule file, generated from the rule
+#: constants above (no expression is written twice) — what
+#: `/api/v1/rules` and `/api/v1/alerts` serve when the exposer has no
+#: `rule_file`. The hold groups evaluate on their rules' step.
+BUILTIN_RULE_FILE = _rule_file_text(
+    {
+        "name": "recording",
+        "rules": [{"record": n, "expr": e} for n, e in RECORDING_RULES],
+    },
+    _CHAINED_GROUP,
+    {
+        "name": "alerts",
+        "rules": [{"alert": n, "expr": e} for n, e in ALERT_RULES],
+    },
+    {
+        "name": "alerts_for",
+        "interval": _group_step(ALERT_FOR_RULES),
+        "rules": [
+            {"alert": n, "expr": e, "for": _seconds(f)}
+            for n, e, f, _s in ALERT_FOR_RULES
+        ],
+    },
+    {
+        "name": "alerts_keep_firing",
+        "interval": _group_step(ALERT_KEEP_RULES),
+        "rules": [
+            {
+                "alert": n,
+                "expr": e,
+                "for": _seconds(f),
+                "keep_firing_for": _seconds(k),
+            }
+            for n, e, f, k, _s in ALERT_KEEP_RULES
+        ],
+    },
+)
+
+
 #: demo rule FILE — the literal YAML a reference+server user already
 #: maintains: a layered group (chaining + a static record label) and a
 #: `for:`-hold group on a 1d evaluation interval.
@@ -1051,7 +1038,12 @@ def rules_from_file(spark: SparkSession, sf_dir: str) -> DataFrame:
     brings — over the batch relations."""
     from shards_prometheus_spark.model import samples_multi
 
-    return eval_rule_file(samples_multi(spark, sf_dir), DEMO_RULE_FILE)
+    # from_dir memoizes t_max per (app, sf_dir): no max(ts_us) job
+    return eval_rule_file(
+        samples_multi(spark, sf_dir),
+        DEMO_RULE_FILE,
+        eval_ts_us=PromQLEvaluator.from_dir(spark, sf_dir).eval_time_us(),
+    )
 
 
 def humanize(v: float) -> str:
@@ -1139,15 +1131,13 @@ def rules_chained(spark: SparkSession, sf_dir: str) -> DataFrame:
     series, all at one shared evaluation tick."""
     from shards_prometheus_spark.model import samples_multi
 
-    # from_dir memoizes t_max per (app, sf_dir); constructing the first
-    # chain evaluator from it avoids a full-scan max(ts_us) job per call
-    ev = PromQLEvaluator.from_dir(spark, sf_dir)
-    return eval_rule_group_chained(
+    # from_dir memoizes t_max per (app, sf_dir): no max(ts_us) job
+    return eval_rule_file(
         samples_multi(spark, sf_dir),
-        CHAINED_RULE_GROUP,
+        CHAINED_RULE_FILE,
         memo_key=sf_dir,
-        eval_ts_us=ev.eval_time_us(),
-    )
+        eval_ts_us=PromQLEvaluator.from_dir(spark, sf_dir).eval_time_us(),
+    ).select("rule", "labels", "value")
 
 
 def alert_rules_for(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,23 +1172,20 @@ def rules_alerts_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     ACTIVE user at the latest instant, pending vs firing by whether
     the current truth-run covers the hold, plus the ActiveAt-seconds
     restart series. Exercises `_alert_run_stats`' lag-gap islands +
-    `alert_state_series`' state split end to end against a batch-SQL
-    oracle; the API-visible write-back twin
-    (rule_file_alert_state_samples → /api/v1/query) is pinned by
-    tests/test_rules.py over a controlled pushed store."""
+    `_alert_rule_states`' state split end to end against a batch-SQL
+    oracle; the API-visible write-back (rule_file_alert_state_samples
+    → /api/v1/query) is pinned by tests/test_rules.py over a
+    controlled pushed store."""
     ev = PromQLEvaluator.from_dir(spark, sf_dir)
-    st = alert_state_series(
-        ev,
-        [
-            (
-                "SustainedAboveAverageClicks",
-                "sum by (user) (increase(click[240h])) > "
-                "scalar(avg(sum by (user) (increase(click[240h]))))",
-                _H72_US,
-                _H24_US,
-            )
-        ],
-    )
+    name, expr, for_us, step_us = ALERT_FOR_RULES[0]
+    rule = {
+        "name": name,
+        "expr": expr,
+        "for_us": for_us,
+        "keep_us": 0,
+        "labels": {},
+    }
+    st = _alert_rule_states(ev, rule, step_us, ev.eval_time_us())
     alerts = st.select(
         F.lit("ALERTS").alias("metric"),
         "alertname",

@@ -1356,9 +1356,13 @@ class MetricsExposer:
         else `samples_multi(spark, sf_dir)`. Each request builds a
         fresh evaluator over the current relation — collect-on-query,
         the read twin of collect-on-scrape. `rule_file` (YAML text in
-        the public rule-file shape) makes `/api/v1/rules` and
-        `/api/v1/alerts` serve the USER's groups — chaining and hold
-        semantics included — instead of the built-in demo groups.
+        the public rule-file shape) is the rule file `/api/v1/rules`
+        and `/api/v1/alerts` serve — chaining and hold semantics
+        included — and whose ALERTS / ALERTS_FOR_STATE series the read
+        API answers. Without one, those two endpoints serve the
+        built-in groups, which are a rule file too
+        (rules.BUILTIN_RULE_FILE) evaluated by the same
+        `eval_rule_file` path; no ALERTS series are recorded for them.
 
         `max_samples` / `query_timeout_s` are the paired server's
         public query-safety flags (`--query.max-samples`,
@@ -1891,11 +1895,25 @@ class MetricsExposer:
         the base store (live `samples_fn` or the batch dir) unioned
         with any remote-write pushed state, minus any admin-API
         tombstones (each compiled to ONE negated matcher∧time-range
-        condition — a pushable filter, never a rewrite). Shared by
-        the JSON read API's evaluator construction, the remote-read
-        endpoint, and TSDB snapshots."""
+        condition — a pushable filter, never a rewrite), plus the
+        ALERTS / ALERTS_FOR_STATE series of a loaded rule file.
+        Shared by the JSON read API's evaluator construction, the
+        remote-read endpoint, and TSDB snapshots."""
+        return self._read(need_time=False)[0]
+
+    def _read(self, need_time: bool) -> "tuple[DataFrame, int | None]":
+        """(`read_samples()`'s relation, the stored data's time) — the
+        time is the newest stored sample before the ALERTS union,
+        computed when `need_time` is set or a rule file needs it (else
+        None): the batch dir's memo when the relation is the bare dir
+        (no pushed rows, no tombstones), one collect otherwise (the
+        store changes between requests)."""
         from shards_prometheus_spark.functions.labelset import (
             matcher_condition,
+        )
+        from shards_prometheus_spark.functions.promql_parser import (
+            data_time_us,
+            dir_time_us,
         )
         from shards_prometheus_spark.model import samples_multi
 
@@ -1904,9 +1922,11 @@ class MetricsExposer:
             if self._samples_fn is not None
             else samples_multi(self._spark, self._sf_dir)
         )
+        bare_dir = self._samples_fn is None and not self._tombstones
         pushed = self._rw_samples()
         if pushed is not None:
             base = base.unionByName(pushed, allowMissingColumns=True)
+            bare_dir = False
         for metric, matchers, s_us, e_us in list(self._tombstones):
             cond = matcher_condition(metric, matchers)
             if s_us is not None:
@@ -1914,22 +1934,31 @@ class MetricsExposer:
             if e_us is not None:
                 cond = cond & (F.col("ts_us") <= F.lit(int(e_us)))
             base = base.filter(~cond)
+        t_data = None
+        if need_time or self._rule_file is not None:
+            t_data = (
+                dir_time_us(self._spark, self._sf_dir)
+                if bare_dir
+                else data_time_us(base)
+            )
         if self._rule_file is not None:
             # the ALERTS / ALERTS_FOR_STATE synthetic series upstream
             # records on every rule evaluation — derived here on read
             # from the rule file over the pre-union base (never from
-            # itself), so `ALERTS{alertstate="firing"}` — Grafana's
-            # documented alert-history pattern — answers through the
-            # ordinary read API. A metric-filtered query prunes the
-            # whole leg at optimize time (the literal metric column
-            # folds the filter to false → empty relation).
+            # itself), pinned at the stored data's time, so
+            # `ALERTS{alertstate="firing"}` — Grafana's documented
+            # alert-history pattern — answers through the ordinary
+            # read API. A metric-filtered query prunes the whole leg
+            # at optimize time (the literal metric column folds the
+            # filter to false → empty relation), so a read that does
+            # not select ALERTS runs no job for it.
             from shards_prometheus_spark.operators.rules import (
                 rule_file_alert_state_samples,
             )
 
             try:
                 st = rule_file_alert_state_samples(
-                    base, self._rule_file
+                    base, self._rule_file, eval_ts_us=t_data
                 )
             except Exception:  # noqa: BLE001 - a bad rule file must
                 st = None  # not break the read path (upstream: the
@@ -1938,7 +1967,7 @@ class MetricsExposer:
                 base = base.unionByName(
                     st, allowMissingColumns=True
                 )
-        return base
+        return base, t_data
 
     # -- TSDB admin API (upstream --web.enable-admin-api) ---------------
     def delete_series(
@@ -2108,52 +2137,24 @@ class MetricsExposer:
         from shards_prometheus_spark.functions.promql_parser import (
             PromQLEvaluator,
         )
-        from shards_prometheus_spark.model import samples_multi
         from shards_prometheus_spark.sources.query_api import (
             handle_api_request,
         )
 
         def make_evaluator(eval_ts_us):
-            if (
-                self._tombstones
-                or self._rule_file is not None
-                or self._rw_samples_live()
-            ):
-                # read_samples is the ONE place that builds the
-                # base ∪ pushed union (pushed state changes t_max
-                # between requests), masks admin deletions (t_max
-                # re-derived per request — a deletion can move it),
-                # and unions the ALERTS/ALERTS_FOR_STATE synthetic
-                # series a loaded rule file records (upstream stores
-                # them in its TSDB; Grafana queries
-                # ALERTS{alertstate="firing"} through this path)
-                return PromQLEvaluator(
-                    self.read_samples(), eval_ts_us=eval_ts_us
-                )
-            if self._samples_fn is not None:
-                # live registry: the relation (and its t_max) grows
-                # between requests — rebuild per request
-                return PromQLEvaluator(
-                    self._samples_fn(), eval_ts_us=eval_ts_us
-                )
-            if eval_ts_us is not None:
-                # pinned time needs no t_max collect — cheap to build
-                return PromQLEvaluator(
-                    samples_multi(self._spark, self._sf_dir),
-                    eval_ts_us=eval_ts_us,
-                )
-            # FRESH evaluator per request, t_max from the from_dir
-            # memo (one corpus scan per (app, sf_dir), not per
-            # request). A shared cached instance raced under the
-            # ThreadingHTTPServer: plan construction sets the
-            # evaluator's active grid (and a subquery swaps in its
-            # inner grid while compiling), so two concurrent requests
-            # could build plans against each other's grids. from_dir
-            # also restores the
-            # clear_caches() convention: rewrite a dir in place →
-            # clear_caches releases the t_max memo, where the old
-            # exposer-lifetime cache served a stale pin forever.
-            return PromQLEvaluator.from_dir(self._spark, self._sf_dir)
+            # a FRESH evaluator per request over the current read
+            # relation (pushed state, tombstones and a rule file's
+            # ALERTS series all change between requests); a shared
+            # instance raced under the ThreadingHTTPServer, since plan
+            # construction sets the evaluator's active grid. The
+            # default time is the stored data's — the batch dir's
+            # memo for a bare dir (clear_caches() releases it after a
+            # dir is rewritten in place), one collect otherwise
+            samples, t_data = self._read(need_time=eval_ts_us is None)
+            return PromQLEvaluator(
+                samples,
+                eval_ts_us=t_data if eval_ts_us is None else eval_ts_us,
+            )
 
         # batch-dir stores default to the exemplars parsed off the
         # OpenMetrics payload; a live registry serves exemplars only
@@ -2227,8 +2228,9 @@ class MetricsExposer:
                 self._alertmanagers,
                 headers_by_url=self._am_headers or None,
             )
+        samples, t_data = self._read(need_time=True)
         return notify_firing(
-            PromQLEvaluator(self.read_samples()),
+            PromQLEvaluator(samples, eval_ts_us=t_data),
             self._rule_file,
             self._notifier,
             generator_url=f"http://{self.host}:{self.port}/graph",

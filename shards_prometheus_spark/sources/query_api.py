@@ -453,60 +453,6 @@ def parse_label_str(s: str) -> dict:
     return out
 
 
-def _alert_groups():
-    """The configured alerting-rule groups: (group_name, rows_fn,
-    definitions) — definitions as (alertname, expr, for_us, keep_us,
-    step_us) with 0 where a rule has no hold/grace."""
-    from shards_prometheus_spark.operators import rules as R
-
-    return [
-        (
-            "alerts",
-            lambda ev: R.eval_rule_group(ev, R.ALERT_RULES, "alertname"),
-            [(n, e, 0, 0, 0) for n, e in R.ALERT_RULES],
-        ),
-        (
-            "alerts_for",
-            lambda ev: R.eval_alert_for_group(
-                ev, R.ALERT_FOR_RULES, "alertname"
-            ),
-            [(n, e, f, 0, s) for n, e, f, s in R.ALERT_FOR_RULES],
-        ),
-        (
-            "alerts_keep_firing",
-            lambda ev: R.eval_alert_keep_group(
-                ev, R.ALERT_KEEP_RULES, "alertname"
-            ),
-            [(n, e, f, k, s) for n, e, f, k, s in R.ALERT_KEEP_RULES],
-        ),
-    ]
-
-
-def _firing_rows(evaluator) -> dict:
-    """alertname → [(labels dict, value)] across all alert groups,
-    incl. the chained group's alert (evaluated through its chain)."""
-    from shards_prometheus_spark.operators import rules as R
-
-    out: dict[str, list] = {}
-    for _g, rows_fn, _defs in _alert_groups():
-        for r in rows_fn(evaluator).collect():
-            out.setdefault(r["alertname"], []).append(
-                (parse_label_str(r["labels"]), r["value"])
-            )
-    chained_alerts = {
-        n for kind, n, _e in R.CHAINED_RULE_GROUP if kind == "alert"
-    }
-    rows = R.eval_rule_group_chained(
-        evaluator.samples.drop("t_max"), R.CHAINED_RULE_GROUP
-    ).collect()
-    for r in rows:
-        if r["rule"] in chained_alerts:
-            out.setdefault(r["rule"], []).append(
-                (parse_label_str(r["labels"]), r["value"])
-            )
-    return out
-
-
 def _alert_json(
     name: str,
     labels: dict,
@@ -549,47 +495,53 @@ def _alert_json(
     return out
 
 
-def _file_firing_rows(evaluator, rule_file: str) -> dict:
-    """alertname → [(labels dict, value)] by evaluating a USER rule
-    file (eval_rule_file semantics: in-group chaining + holds)."""
+def _rule_file_firing(evaluator, rule_file: str) -> dict:
+    """alertname → [(labels dict, value)]: the rule file's firing set
+    at the evaluator's time (eval_rule_file semantics: in-group
+    chaining + holds). Only the alert legs are collected — the record
+    vectors are filtered out in the plan, where the literal `kind`
+    column prunes them."""
     from shards_prometheus_spark.operators import rules as R
 
-    rows = R.eval_rule_file(
-        evaluator.samples.drop("t_max"), rule_file
-    ).collect()
+    rows = (
+        R.eval_rule_file(
+            evaluator.samples.drop("t_max"),
+            rule_file,
+            eval_ts_us=evaluator.eval_time_us(),
+        )
+        .filter(F.col("kind") == "alert")
+        .collect()
+    )
     out: dict[str, list] = {}
     for r in rows:
-        if r["kind"] == "alert":
-            out.setdefault(r["rule"], []).append(
-                (parse_label_str(r["labels"]), r["value"])
-            )
+        out.setdefault(r["rule"], []).append(
+            (parse_label_str(r["labels"]), r["value"])
+        )
     return out
 
 
-def alerts_data(evaluator, rule_file: str | None = None) -> dict:
-    """`/api/v1/alerts`: every currently-firing alert across the
-    configured groups — the exposer's `rule_file` (a user's
-    rules.yml) when given, else the built-in demo groups — public
-    shape ({labels incl. alertname, state, value})."""
+def alerts_data(evaluator, rule_file: str) -> dict:
+    """`/api/v1/alerts`: every currently-firing alert of a rule file —
+    the exposer's `rule_file` (a user's rules.yml) or the built-in
+    groups (rules.BUILTIN_RULE_FILE) — in the public shape ({labels
+    incl. alertname and the rule's static labels, annotations, state,
+    value})."""
     from shards_prometheus_spark.operators import rules as R
 
-    if rule_file is not None:
-        firing = _file_firing_rows(evaluator, rule_file)
-        defs = {
-            r["name"]: r
-            for g in R.load_rule_groups(rule_file)
-            for r in g["rules"]
-            if r["kind"] == "alert"
-        }
-    else:
-        firing, defs = _firing_rows(evaluator), {}
+    firing = _rule_file_firing(evaluator, rule_file)
+    defs = {
+        r["name"]: r
+        for g in R.load_rule_groups(rule_file)
+        for r in g["rules"]
+        if r["kind"] == "alert"
+    }
     alerts = [
         _alert_json(
             name,
             labels,
             v,
-            rule_labels=defs[name]["labels"] if name in defs else None,
-            annotations=defs[name]["annotations"] if name in defs else None,
+            rule_labels=defs[name]["labels"],
+            annotations=defs[name]["annotations"],
         )
         for name, rows in sorted(firing.items())
         for labels, v in sorted(rows, key=lambda t: sorted(t[0].items()))
@@ -597,15 +549,16 @@ def alerts_data(evaluator, rule_file: str | None = None) -> dict:
     return {"alerts": alerts}
 
 
-def _file_rules_data(evaluator, include_alerts: bool, rule_file: str) -> dict:
-    """`/api/v1/rules` over a USER rule file: definitions straight
-    from the YAML (duration/keepFiringFor/labels/annotations), state
-    and active alerts from one eval_rule_file pass when requested."""
+def rules_data(evaluator, include_alerts: bool, rule_file: str) -> dict:
+    """`/api/v1/rules`: a rule file's recording + alerting groups in
+    the public shape — definitions straight from the YAML
+    (interval/duration/keepFiringFor/labels/annotations); each
+    alerting rule's state and active alerts from one eval_rule_file
+    pass per request unless `exclude_alerts` (the public parameter)
+    is set."""
     from shards_prometheus_spark.operators import rules as R
 
-    firing = (
-        _file_firing_rows(evaluator, rule_file) if include_alerts else {}
-    )
+    firing = _rule_file_firing(evaluator, rule_file) if include_alerts else {}
     groups = []
     for g in R.load_rule_groups(rule_file):
         rules = []
@@ -652,77 +605,6 @@ def _file_rules_data(evaluator, include_alerts: bool, rule_file: str) -> dict:
                 "rules": rules,
             }
         )
-    return {"groups": groups}
-
-
-def rules_data(
-    evaluator, include_alerts: bool, rule_file: str | None = None
-) -> dict:
-    """`/api/v1/rules`: the configured recording + alerting groups in
-    the public shape — rule definitions always; each alerting rule's
-    active alerts evaluated per request unless `exclude_alerts` (the
-    public parameter) is set. With `rule_file` set on the exposer,
-    the user's YAML groups replace the built-in demo groups."""
-    from shards_prometheus_spark.operators import rules as R
-
-    if rule_file is not None:
-        return _file_rules_data(evaluator, include_alerts, rule_file)
-    firing = _firing_rows(evaluator) if include_alerts else {}
-    groups = [
-        {
-            "name": "recording",
-            "rules": [
-                {"type": "recording", "name": n, "query": e, "health": "ok"}
-                for n, e in R.RECORDING_RULES
-            ],
-        },
-    ]
-
-    def finish(entry: dict) -> dict:
-        if entry["type"] == "alerting" and include_alerts:
-            active = firing.get(entry["name"], [])
-            entry["state"] = "firing" if active else "inactive"
-            entry["alerts"] = [
-                _alert_json(entry["name"], labels, v)
-                for labels, v in sorted(
-                    active, key=lambda t: sorted(t[0].items())
-                )
-            ]
-        return entry
-
-    groups.append(
-        {
-            "name": "recording_chained",
-            "rules": [
-                finish(
-                    {
-                        "type": "recording"
-                        if kind == "record"
-                        else "alerting",
-                        "name": n,
-                        "query": e,
-                        "health": "ok",
-                    }
-                )
-                for kind, n, e in R.CHAINED_RULE_GROUP
-            ],
-        }
-    )
-    for gname, _rows_fn, defs in _alert_groups():
-        rules = [
-            finish(
-                {
-                    "type": "alerting",
-                    "name": name,
-                    "query": expr,
-                    "duration": for_us / 1e6,
-                    "keepFiringFor": keep_us / 1e6,
-                    "health": "ok",
-                }
-            )
-            for name, expr, for_us, keep_us, _step in defs
-        ]
-        groups.append({"name": gname, "rules": rules})
     return {"groups": groups}
 
 
@@ -1058,8 +940,9 @@ def handle_api_request(
     pinned at the given time (None = data t_max) — collect-on-query,
     the read twin of the exposer's collect-on-scrape. `params` is the
     parse_qs dict (each value a list). `rule_file` (a user's YAML
-    rules text) makes /api/v1/rules and /api/v1/alerts serve THOSE
-    groups instead of the built-in demo groups.
+    rules text) is what /api/v1/rules and /api/v1/alerts serve; with
+    none they serve the built-in groups' rule file
+    (rules.BUILTIN_RULE_FILE) through the same code.
 
     Resource guards (the paired server's public query-safety flags):
     `max_samples` caps how many result samples `/api/v1/query` and
@@ -1267,14 +1150,20 @@ def handle_api_request(
                     "data": data[:limit],
                     "warnings": ["results truncated due to limit"],
                 }
-        elif path == "/api/v1/alerts":
-            data = alerts_data(make_evaluator(None), rule_file)
-        elif path == "/api/v1/rules":
-            data = rules_data(
-                make_evaluator(None),
-                include_alerts=p("exclude_alerts") not in ("true", "1"),
-                rule_file=rule_file,
+        elif path in ("/api/v1/alerts", "/api/v1/rules"):
+            from shards_prometheus_spark.operators.rules import (
+                BUILTIN_RULE_FILE,
             )
+
+            rules_text = BUILTIN_RULE_FILE if rule_file is None else rule_file
+            if path == "/api/v1/alerts":
+                data = alerts_data(make_evaluator(None), rules_text)
+            else:
+                data = rules_data(
+                    make_evaluator(None),
+                    include_alerts=p("exclude_alerts") not in ("true", "1"),
+                    rule_file=rules_text,
+                )
         elif path == "/api/v1/query_exemplars":
             query = p("query")
             if query is None:

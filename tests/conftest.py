@@ -25,3 +25,19 @@ def duck():
     from tools.parity import duck_connection
 
     return duck_connection(SF_SMOKE)
+
+
+def count_spark_jobs(spark, fn):
+    """Run `fn()` under a fresh Spark job group on this thread →
+    (its result, the number of Spark jobs it ran)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count_spark_jobs")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -764,14 +764,15 @@ def test_parse_label_str_inverse_of_label_str(spark):
 
 def test_api_rules_alerts_metadata_buildinfo(spark):
     """/api/v1/rules, /api/v1/alerts, /api/v1/metadata,
-    /api/v1/status/buildinfo — the rule-state and metadata surface;
-    alerts must equal the batch rule evaluators' firing sets."""
-    from shards_prometheus_spark.operators.rules import (
-        alert_rules,
-        alert_rules_for,
-        alert_rules_keep_firing,
+    /api/v1/status/buildinfo — the rule-state and metadata surface.
+    The built-in groups' alerts must equal the batch rule evaluators'
+    firing sets exactly — alertname, labels AND value — and the rule
+    listing keeps its group order and every rule's definition."""
+    from shards_prometheus_spark.operators import rules as R
+    from shards_prometheus_spark.sources.query_api import (
+        _fmt_value,
+        parse_label_str,
     )
-    from shards_prometheus_spark.sources.query_api import parse_label_str
 
     exposer = MetricsExposer(spark, SF_SMOKE).start()
     try:
@@ -787,48 +788,106 @@ def test_api_rules_alerts_metadata_buildinfo(spark):
                         if k != "alertname"
                     )
                 ),
+                e["value"],
             )
             for e in payload["data"]["alerts"]
         }
+        assert len(got) == len(payload["data"]["alerts"])
         assert all(
             e["state"] == "firing" for e in payload["data"]["alerts"]
         )
         want = set()
-        for fn in (alert_rules, alert_rules_for, alert_rules_keep_firing):
+        for fn in (
+            R.alert_rules,
+            R.alert_rules_for,
+            R.alert_rules_keep_firing,
+        ):
             for r in fn(spark, SF_SMOKE).collect():
                 want.add((
                     r["alertname"],
                     tuple(sorted(parse_label_str(r["labels"]).items())),
+                    _fmt_value(r["value"]),
                 ))
-        from shards_prometheus_spark.operators.rules import rules_chained
-
-        for r in rules_chained(spark, SF_SMOKE).collect():
+        for r in R.rules_chained(spark, SF_SMOKE).collect():
             if r["rule"] == "AboveAverageDailyClickRate":
                 want.add((
                     r["rule"],
                     tuple(sorted(parse_label_str(r["labels"]).items())),
+                    _fmt_value(r["value"]),
                 ))
         assert got == want and len(got) > 0
+
+        # every rule's definition, in group order: (type, name, query,
+        # duration, keepFiringFor) — hold durations in seconds
+        def alerting(name, expr, for_us=0, keep_us=0):
+            return ("alerting", name, expr, for_us / 1e6, keep_us / 1e6)
+
+        want_groups = [
+            (
+                "recording",
+                [
+                    ("recording", n, e, None, None)
+                    for n, e in R.RECORDING_RULES
+                ],
+            ),
+            (
+                "recording_chained",
+                [
+                    ("recording", n, e, None, None)
+                    if kind == "record"
+                    else alerting(n, e)
+                    for kind, n, e in R.CHAINED_RULE_GROUP
+                ],
+            ),
+            ("alerts", [alerting(n, e) for n, e in R.ALERT_RULES]),
+            (
+                "alerts_for",
+                [alerting(n, e, f) for n, e, f, _s in R.ALERT_FOR_RULES],
+            ),
+            (
+                "alerts_keep_firing",
+                [
+                    alerting(n, e, f, k)
+                    for n, e, f, k, _s in R.ALERT_KEEP_RULES
+                ],
+            ),
+        ]
+
+        def definition(rule: dict) -> tuple:
+            if rule["type"] == "recording":
+                return (
+                    rule["type"],
+                    rule["name"],
+                    rule["query"],
+                    rule.get("duration"),
+                    rule.get("keepFiringFor"),
+                )
+            return (
+                rule["type"],
+                rule["name"],
+                rule["query"],
+                rule.get("duration", 0.0),
+                rule.get("keepFiringFor", 0.0),
+            )
 
         status, payload = _api_get(
             exposer, "/api/v1/rules?exclude_alerts=true"
         )
-        groups = {g["name"]: g for g in payload["data"]["groups"]}
-        assert set(groups) == {
-            "recording",
-            "recording_chained",
-            "alerts",
-            "alerts_for",
-            "alerts_keep_firing",
-        }
-        for g in groups.values():
+        assert status == 200
+        assert [
+            (g["name"], [definition(r) for r in g["rules"]])
+            for g in payload["data"]["groups"]
+        ] == want_groups
+        for g in payload["data"]["groups"]:
             for rule in g["rules"]:
                 assert "alerts" not in rule and rule["query"]
-        kf = groups["alerts_keep_firing"]["rules"][0]
-        assert kf["duration"] == 24 * 3600.0
-        assert kf["keepFiringFor"] == 48 * 3600.0
 
         status, payload = _api_get(exposer, "/api/v1/rules")
+        assert status == 200
+        assert [
+            (g["name"], [definition(r) for r in g["rules"]])
+            for g in payload["data"]["groups"]
+        ] == want_groups
         rules = [
             r
             for g in payload["data"]["groups"]
@@ -836,6 +895,7 @@ def test_api_rules_alerts_metadata_buildinfo(spark):
             if r["type"] == "alerting"
         ]
         firing_names = {e[0] for e in want}
+        served = set()
         for r in rules:
             assert r["state"] == (
                 "firing" if r["name"] in firing_names else "inactive"
@@ -843,6 +903,19 @@ def test_api_rules_alerts_metadata_buildinfo(spark):
             assert {a["labels"]["alertname"] for a in r["alerts"]} <= {
                 r["name"]
             }
+            for a in r["alerts"]:
+                served.add((
+                    a["labels"]["alertname"],
+                    tuple(
+                        sorted(
+                            (k, v)
+                            for k, v in a["labels"].items()
+                            if k != "alertname"
+                        )
+                    ),
+                    a["value"],
+                ))
+        assert served == want
 
         status, payload = _api_get(exposer, "/api/v1/metadata")
         meta = payload["data"]

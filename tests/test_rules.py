@@ -11,8 +11,8 @@ from shards_prometheus_spark.functions.promql_parser import (
 )
 from shards_prometheus_spark.model import samples_multi
 from shards_prometheus_spark.operators.rules import (
-    CHAINED_RULE_GROUP,
-    eval_rule_group_chained,
+    CHAINED_RULE_FILE,
+    eval_rule_file,
 )
 from tests.conftest import SF_SMOKE
 
@@ -22,10 +22,7 @@ def test_group_query_offset_shifts_evaluation(spark):
     group evaluates that far behind the store's now — the recorded
     value AND its timestamp shift by the offset, while an offset-free
     group on the same file still reads the newest sample."""
-    from shards_prometheus_spark.operators.rules import (
-        eval_rule_file,
-        load_rule_groups,
-    )
+    from shards_prometheus_spark.operators.rules import load_rule_groups
 
     _US = 1_000_000
     rows = [
@@ -60,12 +57,13 @@ groups:
 
 def test_chained_layer_needs_the_chain(spark):
     """A record selector against the RAW store is empty — the layered
-    expression only resolves because eval_rule_group_chained writes
-    each record's vector back before the next rule runs."""
+    expression only resolves because eval_rule_file writes each
+    record's vector back before the next rule runs (the layered group
+    `rules_chained` evaluates)."""
     samples = samples_multi(spark, SF_SMOKE)
     plain = PromQLEvaluator(samples).eval("user:click:rate720h * 86400")
     assert plain.count() == 0
-    chained = eval_rule_group_chained(samples, CHAINED_RULE_GROUP)
+    chained = eval_rule_file(samples, CHAINED_RULE_FILE)
     by_rule = {}
     for r in chained.collect():
         by_rule.setdefault(r["rule"], {})[r["labels"]] = r["value"]
@@ -161,3 +159,75 @@ groups:
         assert float(fs2[0]["value"][1]) == t0_ms / 1000.0  # pinned
     finally:
         ex.stop()
+
+
+def test_alerts_series_firing_set_equals_alerts_endpoint(spark):
+    """For every alert rule of DEMO_RULE_FILE, the firing
+    `ALERTS{alertstate="firing"}` series carry exactly the
+    (alertname, labels) set `/api/v1/alerts` serves — including a rule
+    without `for:`, which fires at the group tick the moment its
+    expression holds (ActiveAt = that tick)."""
+    from shards_prometheus_spark.operators.rules import (
+        DEMO_RULE_FILE,
+        load_rule_groups,
+    )
+    from shards_prometheus_spark.sources import MetricsExposer
+
+    ex = MetricsExposer(spark, SF_SMOKE, rule_file=DEMO_RULE_FILE)
+
+    def ident(labels: dict) -> tuple:
+        return (
+            labels["alertname"],
+            tuple(
+                sorted(
+                    (k, v)
+                    for k, v in labels.items()
+                    if k not in ("alertname", "alertstate", "__name__")
+                )
+            ),
+        )
+
+    status, payload = ex.handle_api("/api/v1/alerts", {})
+    assert status == 200
+    served = {ident(a["labels"]) for a in payload["data"]["alerts"]}
+    status, payload = ex.handle_api(
+        "/api/v1/query",
+        {"query": ['ALERTS{alertstate="firing"}']},
+    )
+    assert status == 200
+    series = {ident(s["metric"]) for s in payload["data"]["result"]}
+    names = [
+        r["name"]
+        for g in load_rule_groups(DEMO_RULE_FILE)
+        for r in g["rules"]
+        if r["kind"] == "alert"
+    ]
+    for name in names:
+        want = {a for a in served if a[0] == name}
+        assert {s for s in series if s[0] == name} == want, name
+    # the for:-less rule fires at this scale, so the check has teeth
+    assert any(a[0] == "AboveAverageDailyClickRate" for a in served)
+
+
+def test_alerts_rule_file_read_runs_no_extra_jobs(spark):
+    """A rule file's ALERTS leg is pinned at the stored data's time,
+    taken from the batch dir's memo: a warm read that does not select
+    ALERTS runs no more Spark jobs than on an exposer without rules."""
+    from shards_prometheus_spark.operators.rules import DEMO_RULE_FILE
+    from shards_prometheus_spark.sources import MetricsExposer
+    from tests.conftest import count_spark_jobs
+
+    params = {"query": ["sum(count_over_time(click[30d]))"]}
+
+    def jobs(ex) -> int:
+        status, _payload = ex.handle_api("/api/v1/query", params)
+        assert status == 200
+        (status, payload), n = count_spark_jobs(
+            spark, lambda: ex.handle_api("/api/v1/query", params)
+        )
+        assert status == 200 and payload["data"]["result"]
+        return n
+
+    plain = jobs(MetricsExposer(spark, SF_SMOKE))
+    ruled = jobs(MetricsExposer(spark, SF_SMOKE, rule_file=DEMO_RULE_FILE))
+    assert ruled <= plain, (ruled, plain)
