@@ -19,10 +19,16 @@ One rule path: `eval_rule_file` is the only code that evaluates a rule
 group — a user's rules.yml, the built-in groups (`BUILTIN_RULE_FILE`,
 generated from the rule constants below) and the registered
 `rules_chained` / `rules_from_file` queries all go through it, and the
-ALERTS / ALERTS_FOR_STATE series derive from the same pass. The
-per-kind builders (`eval_rule_group`, `eval_alert_for_group`,
-`eval_alert_keep_group`) are its building blocks; the registered
-`recording_rules` / `alert_rules*` queries call them directly.
+ALERTS / ALERTS_FOR_STATE series derive from the same pass.
+
+One alert-state derivation: `_alert_states` is the only code that
+decides whether a `for:` / `keep_firing_for:` alert is firing or
+pending. It builds each rule's expression once; the firing sets of
+`eval_rule_file`, `eval_alert_for_group` and `eval_alert_keep_group`
+and the ALERTS series are projections of its one relation. The one
+other decision is `_eval_threshold_batch`, the fused scan the
+registered `alert_rules_for` query runs for same-shape threshold
+rules, whose count equals the run test on a step-multiple `for:`.
 
 Scale shape: each rule is one evaluator plan (one scan per selector
 leaf; the evaluation time is a literal column); the union is
@@ -33,6 +39,7 @@ exactly how a Prometheus server schedules them.
 
 from __future__ import annotations
 
+import functools
 import re
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -92,16 +99,19 @@ def eval_rule_group(
     """Evaluate a rule group against ANY samples relation (batch
     parquet or a streamed sink table) — each rule's result vector
     labeled with its rule name, unioned plan-level."""
-    parts = [
-        ev.eval(expr).select(
-            F.lit(name).alias(name_col), "labels", "value"
-        )
-        for name, expr in rules
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    return _union_all(
+        [
+            ev.eval(expr).select(
+                F.lit(name).alias(name_col), "labels", "value"
+            )
+            for name, expr in rules
+        ]
+    )
+
+
+def _union_all(parts: "list[DataFrame]") -> DataFrame:
+    """The plan-level union of same-schema relations."""
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 #: (kind, name, expr) — a LAYERED rule group: later rules select
@@ -311,35 +321,136 @@ def _eval_threshold_batch(
     )
 
 
+def _alert_states(
+    ev: PromQLEvaluator,
+    name: str,
+    expr: str,
+    for_us: int,
+    keep_us: int,
+    step_us: int,
+) -> DataFrame:
+    """The one derivation of a `for:` / `keep_firing_for:` alert's
+    state at the latest evaluation instant T: every ACTIVE alert as
+    (alertname, labels MAP, alertstate firing|pending, active_at_us,
+    value). Upstream's rules/alerting.go keeps the same per-alert
+    state in memory; here it is recomputed COLD from the start of the
+    rule's hold span — the restarted-server convention, so a run
+    longer than the span clamps its ActiveAt to the span start.
+
+    The comparison only emits instants where it HOLDS and grid
+    instants are step-aligned, so a run of consecutive trues is a
+    lag-gap island: a true instant opens a run iff its predecessor is
+    not exactly one step earlier. Over the true instants t of one
+    label set (one window pass: lag 1, lag K, lead 1):
+
+    - firing_raw(t) ⇔ ``t - run_start(t) >= for`` (upstream's
+      ``now - ActiveAt >= for``, for ANY for/step ratio). Run lengths
+      are whole steps, so that is a run of K = ⌈for/step⌉ steps
+      ending at t: the K-th earlier true instant is t - K·step.
+    - a KILL follows t iff some FALSE instant ts in the gap after it
+      satisfies ``ts - keep_since >= keep``, where keep_since —
+      upstream's KeepFiringSince — is the first false instant,
+      t + step. The largest false instant before the next true nt is
+      nt - step, so the gap kills iff ``nt - t >= keep + 2·step``;
+      after the last true the largest false instant is T itself, so
+      the tail kills iff ``T - t >= keep + step``. With keep = 0 any
+      false instant kills: a `for:` alert fires iff its run at T has
+      lasted `for`.
+    - FIRING ⇔ the latest firing_raw instant is later than the latest
+      kill (a kill always falls strictly before the next true, so
+      comparing the true instants the gaps start at is exact).
+      ACTIVE ⇔ firing or true at T; PENDING otherwise. ActiveAt is the
+      start of the run holding the last true instant, and the value
+      the last true instant's — what a held alert keeps exporting.
+
+    Span: ``K·step + step`` without keep (`for + step` for a
+    step-multiple `for:`; the span always holds a run of K steps),
+    ``for + keep + 4·step`` with it. One plan per rule; the window
+    partitions and the groupBy are per label set, never
+    corpus-sized."""
+    k = -(-for_us // step_us)
+    span_us = (
+        for_us + keep_us + 4 * step_us if keep_us else (k + 1) * step_us
+    )
+    g = ev.eval_range_map(expr, span_us, step_us)
+    # grid end as a literal — driver-side integer arithmetic off the
+    # pinned t_max
+    t_end = max(ev.grid_points_py(Subquery(None, span_us, step_us)))
+    ts = F.col("ts_us")
+    w = Window.partitionBy("_k").orderBy("ts_us")
+    runs = g.withColumn("_k", label_str("labels")).select(
+        "_k",
+        "labels",
+        "ts_us",
+        "value",
+        F.lag("ts_us").over(w).alias("_prev"),
+        F.lag("ts_us", k).over(w).alias("_lagk"),
+        F.lead("ts_us").over(w).alias("_next"),
+    )
+    prev, nxt = F.col("_prev"), F.col("_next")
+    kill = F.when(
+        nxt.isNotNull(), nxt - ts >= F.lit(keep_us + 2 * step_us)
+    ).otherwise(F.lit(t_end) - ts >= F.lit(keep_us + step_us))
+    agg = runs.groupBy("_k").agg(
+        F.first("labels").alias("labels"),
+        F.max(
+            F.when(F.col("_lagk") == ts - F.lit(k * step_us), ts)
+        ).alias("_fraw"),
+        F.max(F.when(kill, ts)).alias("_kill"),
+        F.max(
+            F.when(prev.isNull() | (prev != ts - F.lit(step_us)), ts)
+        ).alias("active_at_us"),
+        F.max(F.struct("ts_us", "value")).alias("_last"),
+    )
+    firing = F.col("_fraw").isNotNull() & (
+        F.col("_kill").isNull() | (F.col("_kill") < F.col("_fraw"))
+    )
+    active = firing | (F.col("_last.ts_us") == F.lit(t_end))
+    return agg.filter(active).select(
+        F.lit(name).alias("alertname"),
+        "labels",
+        F.when(firing, F.lit("firing"))
+        .otherwise(F.lit("pending"))
+        .alias("alertstate"),
+        "active_at_us",
+        F.col("_last.value").alias("value"),
+    )
+
+
+def _firing_rows(states: DataFrame, name_col: str) -> DataFrame:
+    """The firing set of an alert-state relation: (name_col,
+    label_str labels, value)."""
+    return states.filter(F.col("alertstate") == "firing").select(
+        F.col("alertname").alias(name_col),
+        label_str("labels").alias("labels"),
+        "value",
+    )
+
+
 def eval_alert_for_group(
     ev: PromQLEvaluator,
     rules: list[tuple[str, str, int, int]],
     name_col: str,
 ) -> DataFrame:
-    """`for:` hold semantics over ANY samples relation: one
-    `eval_range` over the hold window per rule (the comparison only
-    emits series where it holds, so an alert is FIRING iff its label
-    set appears at every grid instant); the reported value is the
-    most recent instant's. Plan-level union across rules, one grid
-    pass per rule — no driver loop over collected results.
+    """`for:` hold semantics over ANY samples relation: (name_col,
+    labels, value) for every FIRING alert — Prometheus fires when
+    `now - ActiveAt >= for`, ActiveAt being the first TRUE evaluation
+    of the current run. Each rule's firing set is `_alert_states`'
+    (one grid pass per rule, plan-level union).
 
     Rules of the canonical threshold shape sharing (by, fold, range,
     for, step) fuse into ONE shared-scan evaluation with metric as a
     dimension (`_eval_threshold_batch`, guide §2.4) — the r15 plans
     compiled N identical trees over N disjoint slices of the same
-    scan. Everything else keeps the per-rule eval_range path.
-
-    Prometheus fires when `now - ActiveAt >= for`, where ActiveAt is
-    the first TRUE evaluation — that needs `for/step + 1` consecutive
-    true evaluations (the activation tick plus for/step more). The
-    grid span is therefore `for + step`, which yields exactly
-    `for/step + 1` instants in (t - for - step, t]."""
+    scan. With a step-multiple `for:` a run lasts `for` iff it covers
+    the span's `for/step + 1` instants, so the fused batch's "true at
+    every grid instant" count is the same decision."""
     batches: dict[tuple, list] = {}
     singles: list[tuple[str, str, int, int]] = []
     for rule in rules:
         _name, expr, for_us, step_us = rule
         shape = _threshold_rule_shape(expr)
-        if shape is None:
+        if shape is None or for_us % step_us:
             singles.append(rule)
             continue
         metric, op, by, fn, range_us = shape
@@ -362,87 +473,11 @@ def eval_alert_for_group(
                 range_us, for_us + step_us, step_us, name_col,
             )
         )
-    for name, expr, for_us, step_us in singles:
-        span_us = for_us + step_us
-        g = ev.eval_range(expr, span_us, step_us)
-        # true grid size (NOT a count of surviving instants — an
-        # all-failing instant must disqualify); the epoch-aligned grid
-        # is driver-side integer arithmetic off the pinned t_max, so
-        # the old per-rule count aggregate + broadcast join is a
-        # literal (guide §2.4)
-        ng = len(ev.grid_points_py(Subquery(None, span_us, step_us)))
-        parts.append(
-            g.groupBy("labels")
-            .agg(
-                F.count(F.lit(1)).alias("_n"),
-                F.max(F.struct("ts_us", "value")).alias("_last"),
-            )
-            .filter(F.col("_n") == F.lit(ng))
-            .select(
-                F.lit(name).alias(name_col),
-                "labels",
-                F.col("_last.value").alias("value"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _alert_run_stats(
-    ev: PromQLEvaluator, expr: str, step_us: int, span_us: int
-) -> DataFrame:
-    """Per-label-set truth-run statistics of one alert expression
-    over the trailing evaluation grid — the state the ALERTS /
-    ALERTS_FOR_STATE synthetic series derive from (upstream's
-    rules/alerting.go keeps the same per-alert ActiveAt in memory;
-    here it is recomputed COLD from the window start, the
-    restarted-server convention every hold evaluation in this module
-    shares, so a longer-than-window activation clamps to the window).
-
-    The comparison only emits instants where it HOLDS and grid
-    instants are step-aligned, so a run of consecutive trues is a
-    lag-gap island: a row opens a run iff its predecessor is not
-    exactly one step earlier. Returns one row per label set with any
-    true instant: (labels MAP, _k label_str key, last_true_us,
-    active_at_us = start of the island containing last_true,
-    value = the latest true instant's, _T = the grid end). All
-    window partitions are per-label-set — never corpus-sized."""
-    from shards_prometheus_spark.functions.labelset import label_str
-
-    g = ev.eval_range_map(expr, span_us, step_us)
-    # grid end as a literal — driver-side integer arithmetic off the
-    # pinned t_max (was a per-rule max aggregate + broadcast join)
-    t_end = max(ev.grid_points_py(Subquery(None, span_us, step_us)))
-    w = Window.partitionBy("_k").orderBy("ts_us")
-    return (
-        g.withColumn("_k", label_str("labels"))
-        .withColumn("_prev", F.lag("ts_us").over(w))
-        .withColumn(
-            "_start",
-            F.when(
-                F.col("_prev").isNull()
-                | (F.col("_prev") != F.col("ts_us") - F.lit(step_us)),
-                F.col("ts_us"),
-            ),
-        )
-        .groupBy("_k")
-        .agg(
-            F.first("labels").alias("labels"),
-            F.max("ts_us").alias("last_true_us"),
-            F.max("_start").alias("active_at_us"),
-            F.max(F.struct("ts_us", "value")).alias("_last"),
-        )
-        .select(
-            "_k",
-            "labels",
-            "last_true_us",
-            "active_at_us",
-            F.col("_last.value").alias("value"),
-            F.lit(t_end).alias("_T"),
-        )
-    )
+    parts += [
+        _firing_rows(_alert_states(ev, n, e, f, 0, s), name_col)
+        for n, e, f, s in singles
+    ]
+    return _union_all(parts)
 
 
 #: (alertname, expr, for_us, keep_firing_for_us, step_us) — alert rules
@@ -470,82 +505,16 @@ def eval_alert_keep_group(
     rules: list[tuple[str, str, int, int, int]],
     name_col: str,
 ) -> DataFrame:
-    """`for:` + `keep_firing_for:` state at the latest evaluation
-    instant T, computed from the TRUE evaluation instants alone (the
-    comparison emits only instants where it holds, and grid instants
-    are step-aligned, so consecutive trues are exactly `step` apart):
-
-    - firing_raw(t): a run of for/step + 1 consecutive trues ends at t
-      — detected as lag(ts, for/step) == t - for (one window pass).
-    - a KILL occurs after true instant t iff some FALSE grid instant
-      ts in the gap satisfies `ts - keep_since >= keep`, where
-      keep_since — upstream's KeepFiringSince — is the FIRST false
-      instant after t, i.e. t + step on a step-aligned grid. The
-      largest false instant before the next true nt is nt - step, so
-      the gap kills iff `nt - t >= keep + 2·step`; for the tail (t is
-      the last true) the largest false instant is T itself, so the
-      kill is `T - t >= keep + step`. Exact for ANY keep/step ratio
-      (the r8 form anchored at the last TRUE evaluation and resolved
-      up to one step early on non-multiple configs — ADVICE r8; the
-      two coincide when keep is a step multiple, as in the configured
-      48h/24h rule).
-    - FIRING at T ⇔ the latest firing_raw instant exists and is later
-      than the latest kill-gap start (a kill instant always falls
-      strictly before the next true, so comparing gap STARTS is
-      exact).
-
-    The state machine is evaluated cold from the window start
-    (span = for + keep + 4·step) — the same convention as a restarted
-    Prometheus. Reported value: the latest TRUE evaluation's, which is
-    what a held alert keeps exporting. One grid pass per rule, all
-    window partitions are per-label (never corpus-sized), plan-level
-    union."""
-    parts = []
-    for name, expr, for_us, keep_us, step_us in rules:
-        span_us = for_us + keep_us + 4 * step_us
-        need = for_us // step_us + 1
-        g = ev.eval_range(expr, span_us, step_us)
-        # grid end as a literal (driver-side arithmetic off t_max —
-        # was a per-rule max aggregate + broadcast join)
-        t_end = max(ev.grid_points_py(Subquery(None, span_us, step_us)))
-        w = Window.partitionBy("labels").orderBy("ts_us")
-        st = (
-            g.withColumn("_lagk", F.lag("ts_us", need - 1).over(w))
-            .withColumn("_next", F.lead("ts_us").over(w))
-            .withColumn("_T", F.lit(t_end))
-        )
-        fraw = F.col("_lagk") == F.col("ts_us") - F.lit(
-            (need - 1) * step_us
-        )
-        kill = F.when(
-            F.col("_next").isNotNull(),
-            F.col("_next") - F.col("ts_us")
-            >= F.lit(keep_us + 2 * step_us),
-        ).otherwise(
-            F.col("_T") - F.col("ts_us") >= F.lit(keep_us + step_us)
-        )
-        agg = st.groupBy("labels").agg(
-            F.max(F.when(fraw, F.col("ts_us"))).alias("_last_fraw"),
-            F.max(F.when(kill, F.col("ts_us"))).alias("_last_kill"),
-            F.max(F.struct("ts_us", "value")).alias("_last_true"),
-        )
-        parts.append(
-            agg.filter(
-                F.col("_last_fraw").isNotNull()
-                & (
-                    F.col("_last_kill").isNull()
-                    | (F.col("_last_kill") < F.col("_last_fraw"))
-                )
-            ).select(
-                F.lit(name).alias(name_col),
-                "labels",
-                F.col("_last_true.value").alias("value"),
-            )
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+    """`for:` + `keep_firing_for:` firing set at the latest evaluation
+    instant: (name_col, labels, value) for every alert `_alert_states`
+    finds FIRING — held alerts included, each reporting its latest
+    TRUE evaluation's value. Plan-level union across rules."""
+    return _union_all(
+        [
+            _firing_rows(_alert_states(ev, n, e, f, k, s), name_col)
+            for n, e, f, k, s in rules
+        ]
+    )
 
 
 def recording_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -657,7 +626,6 @@ def eval_rule_file(
     text: str,
     memo_key: str | None = None,
     eval_ts_us: int | None = None,
-    _state_rows: "list | None" = None,
 ) -> DataFrame:
     """Evaluate a Prometheus rule FILE against a samples relation the
     way the paired server does: within each group, rules run
@@ -693,13 +661,24 @@ def eval_rule_file(
     vector is persisted through the Tier C memo LRU — the batch analog
     of materializing records back to the store, without which layer
     N's lazy plan re-runs every earlier layer per reference (released
-    by clear_caches, one copy per (app, key, group, rule)).
+    by clear_caches, one copy per (app, key, group, rule))."""
+    return _eval_groups(samples, load_rule_groups(text), memo_key, eval_ts_us)
 
-    `_state_rows` (internal, see rule_file_alert_state_samples): a
-    list that, when passed, collects one DataFrame per ALERT rule of
-    (alertname, labels MAP incl. the rule's static labels,
-    alertstate pending|firing, active_at_us, ts_us) — every ACTIVE
-    alert, not just the firing set."""
+
+def _eval_groups(
+    samples: DataFrame,
+    groups: "list[dict]",
+    memo_key: str | None = None,
+    eval_ts_us: int | None = None,
+    states: "list | None" = None,
+) -> "DataFrame | None":
+    """`eval_rule_file` over parsed groups (None when there are none).
+    Each alert rule's expression is built ONCE, as its state relation
+    (`_alert_rule_states`); its firing rows are that relation's
+    `alertstate = 'firing'` projection. `states`, when passed,
+    collects (state relation, the rule's static labels, tick) per
+    ALERT rule — every ACTIVE alert, not just the firing set (see
+    rule_file_alert_state_samples)."""
 
     def _enforce_limit(df: DataFrame, limit: int, rname: str, gname: str):
         """Upstream's group `limit:`: cap the rule's output
@@ -715,10 +694,12 @@ def eval_rule_file(
                     f"rule {rname!r} in group {gname!r}"
                 )
 
+    if not groups:
+        return None
     if eval_ts_us is None:
         eval_ts_us = data_time_us(samples)
     parts = []
-    for g in load_rule_groups(text):
+    for g in groups:
         gsamples = samples
         # upstream ≥2.53 `query_offset:`: the whole group evaluates at
         # ts - query_offset — queries AND the recorded samples'
@@ -771,95 +752,58 @@ def eval_rule_file(
                 gsamples = gsamples.unionByName(rec)
                 ev = PromQLEvaluator(gsamples, eval_ts_us=tick_us)
             else:
-                if r["keep_us"]:
-                    df = eval_alert_keep_group(
-                        ev,
-                        [(r["name"], r["expr"], r["for_us"], r["keep_us"],
-                          step_us)],
-                        "rule",
-                    )
-                elif r["for_us"]:
-                    df = eval_alert_for_group(
-                        ev,
-                        [(r["name"], r["expr"], r["for_us"], step_us)],
-                        "rule",
-                    )
-                else:
-                    df = eval_rule_group(
-                        ev, [(r["name"], r["expr"])], "rule"
-                    )
+                st = _alert_rule_states(ev, r, step_us)
+                df = _firing_rows(st, "rule")
                 _enforce_limit(df, g["limit"], r["name"], g["name"])
                 parts.append(df.select(gcol, kcol, "rule", "labels", "value"))
-                if _state_rows is not None:
-                    _state_rows.append(
-                        _alert_rule_states(ev, r, step_us, tick_us)
-                    )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+                if states is not None:
+                    states.append((st, r["labels"], tick_us))
+    return _union_all(parts) if parts else None
 
 
 def _alert_rule_states(
-    ev: PromQLEvaluator, r: dict, step_us: int, tick_us: int
+    ev: PromQLEvaluator, r: dict, step_us: int
 ) -> DataFrame:
-    """One alert rule's ACTIVE set with state, for the ALERTS /
-    ALERTS_FOR_STATE write-back, at the group tick `tick_us` (the
-    evaluator's pinned time):
-
-    - no `for:` and no `keep_firing_for:` — the expression's instant
-      vector at the tick, the same vector the firing set is: every
-      member fires at once, ActiveAt = the tick;
-    - `keep_firing_for:` — run statistics over the rule's own hold
-      span, the grace-held set firing (eval_alert_keep_group is the
-      single source of keep truth), the rest of the current runs
-      pending;
-    - `for:` — run statistics over the hold span: firing iff the
-      current run covers the hold (``T - ActiveAt >= for``), pending
-      otherwise.
-
-    The rule's static labels merge OVER series labels (upstream: rule
-    labels are part of alert identity)."""
-    for_us, keep_us = r["for_us"], r["keep_us"]
-    if not for_us and not keep_us:
-        active = ev.eval_instant_map(r["expr"]).withColumn(
-            "active_at_us", F.lit(tick_us)
+    """One alert rule's ACTIVE set with state at the evaluator's
+    pinned time, the group tick: (alertname, labels MAP of the series,
+    alertstate, active_at_us, value). A rule with a `for:` or
+    `keep_firing_for:` hold is `_alert_states` over its hold span on
+    the group interval. A rule with neither is its instant vector AT
+    THE TICK — not at an epoch-grid instant, which the tick need not
+    be — every member firing at once with ActiveAt = the tick."""
+    if r["for_us"] or r["keep_us"]:
+        return _alert_states(
+            ev, r["name"], r["expr"], r["for_us"], r["keep_us"], step_us
         )
-        state = F.lit("firing")
-    elif keep_us:
-        stats = _alert_run_stats(
-            ev, r["expr"], step_us, for_us + keep_us + 4 * step_us
-        )
-        keep = eval_alert_keep_group(
-            ev,
-            [(r["name"], r["expr"], for_us, keep_us, step_us)],
-            "rule",
-        ).select(F.col("labels").alias("_kk"))
-        st = stats.join(
-            keep, stats["_k"] == keep["_kk"], "left"
-        )
-        active = st.filter(
-            F.col("_kk").isNotNull()
-            | (F.col("last_true_us") == F.col("_T"))
-        )
-        state = F.when(
-            F.col("_kk").isNotNull(), F.lit("firing")
-        ).otherwise(F.lit("pending"))
-    else:
-        active = _alert_run_stats(
-            ev, r["expr"], step_us, for_us + step_us
-        ).filter(F.col("last_true_us") == F.col("_T"))
-        state = F.when(
-            F.col("_T") - F.col("active_at_us") >= F.lit(for_us),
-            F.lit("firing"),
-        ).otherwise(F.lit("pending"))
-    return active.select(
+    return ev.eval_instant_map(r["expr"]).select(
         F.lit(r["name"]).alias("alertname"),
-        _with_static_labels(F.col("labels"), r["labels"]).alias("labels"),
-        state.alias("alertstate"),
-        "active_at_us",
-        F.lit(tick_us).alias("ts_us"),
+        "labels",
+        F.lit("firing").alias("alertstate"),
+        F.lit(ev.eval_time_us()).alias("active_at_us"),
+        "value",
     )
+
+
+def _alert_groups(text: str) -> "list[dict]":
+    """The groups of a rule file that hold an alert rule. Groups are
+    independent, so a group of record rules alone changes no alert."""
+    return [
+        g
+        for g in load_rule_groups(text)
+        if any(r["kind"] == "alert" for r in g["rules"])
+    ]
+
+
+def rule_file_firing(
+    samples: DataFrame, text: str, eval_ts_us: int | None = None
+) -> "DataFrame | None":
+    """The firing alerts of a rule file, as eval_rule_file's
+    (grp, kind, rule, labels, value) alert rows — only the groups
+    holding an alert rule are evaluated, and the record legs of those
+    are filtered out in the plan. None when the file has no alert
+    rules."""
+    out = _eval_groups(samples, _alert_groups(text), eval_ts_us=eval_ts_us)
+    return None if out is None else out.filter(F.col("kind") == "alert")
 
 
 def rule_file_alert_state_samples(
@@ -875,25 +819,41 @@ def rule_file_alert_state_samples(
 
     rendered in the engine's §1.2 samples-relation shape so the read
     API can serve ``ALERTS{alertstate="firing"}`` — the documented
-    Grafana alert-history pattern. Rides the same eval_rule_file
-    pass as `/api/v1/alerts` (record chaining, query_offset, static
-    labels included) at the same group ticks: evaluated at the same
+    Grafana alert-history pattern. Rides the same pass as
+    `/api/v1/alerts` (`rule_file_firing`: the groups holding an alert
+    rule, record chaining and query_offset included) at the same group
+    ticks, and reads the very state relations whose `firing`
+    projection that endpoint serves: evaluated at the same
     `eval_ts_us` (default the data's max timestamp), the firing
     ALERTS series are exactly the alerts that endpoint serves —
     tests/test_rules.py pins that for every alert rule of
-    DEMO_RULE_FILE, `for:`-less rules included. None when the file
+    DEMO_RULE_FILE, `for:`-less rules included. The rule's static
+    labels merge over the series labels here. None when the file
     has no alert rules. Cold-evaluation convention: ActiveAt clamps
     to the rule's hold window start, like every hold evaluation here
     (a restarted upstream server does the same)."""
     from shards_prometheus_spark.model import series_id_expr
 
     rows: list = []
-    eval_rule_file(samples, text, eval_ts_us=eval_ts_us, _state_rows=rows)
+    _eval_groups(
+        samples, _alert_groups(text), eval_ts_us=eval_ts_us, states=rows
+    )
     if not rows:
         return None
-    st = rows[0]
-    for p in rows[1:]:
-        st = st.unionByName(p)
+    st = _union_all(
+        [
+            s.select(
+                "alertname",
+                _with_static_labels(F.col("labels"), static).alias(
+                    "labels"
+                ),
+                "alertstate",
+                "active_at_us",
+                F.lit(tick_us).alias("ts_us"),
+            )
+            for s, static, tick_us in rows
+        ]
+    )
     # series labels may not collide with the synthetic pair
     # (map_concat raises under the default dedup policy)
     base_labels = F.map_filter(
@@ -1171,21 +1131,15 @@ def rules_alerts_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     Clicks `for: 3d` rule on its 24h evaluation interval — every
     ACTIVE user at the latest instant, pending vs firing by whether
     the current truth-run covers the hold, plus the ActiveAt-seconds
-    restart series. Exercises `_alert_run_stats`' lag-gap islands +
-    `_alert_rule_states`' state split end to end against a batch-SQL
-    oracle; the API-visible write-back (rule_file_alert_state_samples
-    → /api/v1/query) is pinned by tests/test_rules.py over a
-    controlled pushed store."""
-    ev = PromQLEvaluator.from_dir(spark, sf_dir)
+    restart series. Exercises `_alert_states`' run starts and state
+    split end to end against a batch-SQL oracle; the API-visible
+    write-back (rule_file_alert_state_samples → /api/v1/query) is
+    pinned by tests/test_rules.py over a controlled pushed store."""
     name, expr, for_us, step_us = ALERT_FOR_RULES[0]
-    rule = {
-        "name": name,
-        "expr": expr,
-        "for_us": for_us,
-        "keep_us": 0,
-        "labels": {},
-    }
-    st = _alert_rule_states(ev, rule, step_us, ev.eval_time_us())
+    st = _alert_states(
+        PromQLEvaluator.from_dir(spark, sf_dir),
+        name, expr, for_us, 0, step_us,
+    )
     alerts = st.select(
         F.lit("ALERTS").alias("metric"),
         "alertname",
@@ -1295,9 +1249,10 @@ _ALERT_FOR_SQL = (
     "WHERE (SELECT COUNT(*) FROM tabs) = gc.n"
 )
 
-#: keep_firing_for oracle — mirrors eval_alert_keep_group's closed
-#: form: per label, latest firing_raw instant (lag(ets, need-1) check)
-#: vs latest kill-gap start (first-false-anchored upstream countdown:
+#: keep_firing_for oracle — mirrors _alert_states' closed form: per
+#: label, latest firing_raw instant (for a step-multiple `for:`, a run
+#: has lasted `for` at ets iff lag(ets, for/step) = ets - for) vs
+#: latest kill-gap start (first-false-anchored upstream countdown:
 #: next true ≥ keep+2·step away, or last true with T - t ≥ keep+step);
 #: value = the latest TRUE instant's.
 _KEEP_FOR_N = _H24_US // _H24_US + 1  # for/step + 1 consecutive trues
@@ -1400,7 +1355,7 @@ _RULE_FILE_SQL = (
     "HAVING COUNT(*) = (SELECT n FROM gc))"
 )
 
-#: ALERTS/ALERTS_FOR_STATE oracle — mirrors _alert_run_stats' lag-gap
+#: ALERTS/ALERTS_FOR_STATE oracle — mirrors _alert_states' lag-gap
 #: islands: a true instant OPENS a run iff its predecessor is not one
 #: step earlier; active_at = the last run's start; active at T ⇔
 #: last true == grid end; firing ⇔ T - active_at >= for.

@@ -1716,87 +1716,36 @@ class MetricsExposer:
         self._enable_lifecycle = enable_lifecycle
         self._explicit_alertmanagers = alertmanagers is not None
         self._explicit_rule_file = rule_file is not None
-        if scrape_config_path is not None and scrape_config is None:
-            with open(scrape_config_path) as f:
-                self._scrape_config = f.read()
+        # global.external_labels: attached at every OUTBOUND boundary
+        # (alert push, /federate, remote-write send) — never stored
+        # in the local relations, exactly upstream's split.
+        self._external_labels: dict = dict(external_labels or {})
+        self._explicit_external_labels = external_labels is not None
+        #: the OTLP knobs as passed; a config's `otlp:` section fills
+        #: the ones left at their defaults
+        self._otlp_flags = (
+            self._otlp_promote,
+            self._otlp_promote_scope,
+            self._otlp_keep_identifying,
+        )
         # the Alertmanager pool: explicit list, else the loaded
         # prometheus.yml's alerting section (upstream: one config file
         # declares both scrape targets and the notification pool)
+        self._alertmanagers = list(alertmanagers or [])
+        #: per-URL auth headers from the config's alertmanagers[]
+        #: entries (empty for an explicit URL list)
+        self._am_headers: dict = {}
         self._alert_relabel: list = []
-        # global.external_labels: attached at every OUTBOUND boundary
-        # (alert push, /federate, remote-write send) — never stored
-        # in the local relations, exactly upstream's split. Explicit
-        # ctor arg wins (and survives /-/reload); else the loaded
-        # config's global section.
-        self._external_labels: dict = dict(external_labels or {})
-        self._explicit_external_labels = external_labels is not None
         #: relabel-dropped scrape targets (pre-relabel discovered
         #: label sets) + the global keep_dropped_targets cap, served
         #: on /api/v1/targets — resolved at config load and reload
         self._dropped_targets: list = []
         self._keep_dropped_targets = 0
+        if scrape_config_path is not None and scrape_config is None:
+            with open(scrape_config_path) as f:
+                self._scrape_config = f.read()
         if self._scrape_config is not None:
-            from shards_prometheus_spark.sources.scrape_config import (
-                load_scrape_configs,
-                resolve_alertmanagers,
-            )
-
-            import os as _os
-
-            cfg = load_scrape_configs(
-                self._scrape_config,
-                base_dir=(
-                    _os.path.dirname(_os.path.abspath(scrape_config_path))
-                    if scrape_config_path
-                    else None
-                ),
-            )
-            o = getattr(cfg, "otlp", None) or {}
-            # config-section OTLP knobs: adopted when the constructor
-            # flags were left at their defaults (an explicit flag wins)
-            if not self._otlp_promote and o.get(
-                "promote_resource_attributes"
-            ):
-                self._otlp_promote = list(
-                    o["promote_resource_attributes"]
-                )
-            if not self._otlp_promote_scope:
-                self._otlp_promote_scope = bool(
-                    o.get("promote_scope_metadata")
-                )
-            if not self._otlp_keep_identifying:
-                self._otlp_keep_identifying = bool(
-                    o.get("keep_identifying_resource_attributes")
-                )
-            if alertmanagers is None:
-                # the discovery relabel hop:
-                # alertmanagers[].relabel_configs rewrites/drops pool
-                # members before any push
-                from shards_prometheus_spark.sources.scrape_config import (  # noqa: E501
-                    resolve_alertmanagers_full,
-                )
-
-                resolved = resolve_alertmanagers_full(self._spark, cfg)
-                alertmanagers = [u for u, _h in resolved]
-                self._am_headers = {
-                    u: h for u, h in resolved if h
-                }
-                self._alert_relabel = cfg.alert_relabel_configs
-                if rule_file is None and cfg.rule_files:
-                    self._rule_file = self._read_rule_files(
-                        cfg.rule_files
-                    )
-            if external_labels is None:
-                self._external_labels = dict(cfg.external_labels)
-            self._keep_dropped_targets = cfg.keep_dropped_targets
-            self._dropped_targets = _resolve_dropped_targets(
-                self._spark, cfg
-            )
-        self._alertmanagers = list(alertmanagers or [])
-        if not hasattr(self, "_am_headers"):
-            #: per-URL auth headers from the config's alertmanagers[]
-            #: entries (empty for an explicit URL list)
-            self._am_headers = {}
+            self._apply_config(self._scrape_config)
         # TSDB admin API state (upstream --web.enable-admin-api):
         # tombstones are (metric, matchers, start_us, end_us) masks
         # over the read path — deletion over an immutable parquet
@@ -2057,30 +2006,22 @@ class MetricsExposer:
                 groups.extend(doc.get("groups") or [])
         return yaml.safe_dump({"groups": groups}) if groups else None
 
-    def reload_config(self) -> None:
-        """`POST /-/reload` (upstream --web.enable-lifecycle):
-        re-read the prometheus.yml this exposer was constructed from
-        and swap in the new scrape config, Alertmanager pool, and
-        rule files — `/api/v1/status/config` serves the NEW document
-        from the next request on. A parse failure raises (→ 500) and
-        leaves the previous configuration in force, exactly
-        upstream's failed-reload semantics. A no-path exposer (inline
-        YAML text) re-derives pool + rules from the held text — a
-        successful no-op."""
-        from shards_prometheus_spark.sources.scrape_config import (
-            load_scrape_configs,
-            resolve_alertmanagers,
-        )
-
-        text = self._scrape_config
-        if self._scrape_config_path is not None:
-            with open(self._scrape_config_path) as f:
-                text = f.read()
-        if text is None:
-            return
+    def _apply_config(self, text: str) -> None:
+        """Adopt a prometheus.yml document — the one path both the
+        constructor and `/-/reload` take: its `otlp:` knobs, the
+        Alertmanager pool (discovery relabel hop and per-URL auth
+        included), `rule_files:`, `global.external_labels` and the
+        dropped-target list. A constructor argument given explicitly
+        wins over its config section, on reload too. A parse or
+        rule-file read failure raises before anything is swapped."""
         import os as _os
 
-        cfg = load_scrape_configs(  # raises → keep old config
+        from shards_prometheus_spark.sources.scrape_config import (
+            load_scrape_configs,
+            resolve_alertmanagers_full,
+        )
+
+        cfg = load_scrape_configs(
             text,
             base_dir=(
                 _os.path.dirname(
@@ -2090,7 +2031,7 @@ class MetricsExposer:
                 else None
             ),
         )
-        new_rules = (
+        rule_file = (
             self._rule_file
             if self._explicit_rule_file
             else (
@@ -2099,12 +2040,20 @@ class MetricsExposer:
                 else None
             )
         )
-        self._scrape_config = text
+        o = getattr(cfg, "otlp", None) or {}
+        promote, scope, keep = self._otlp_flags
+        self._otlp_promote = promote or list(
+            o.get("promote_resource_attributes") or []
+        )
+        self._otlp_promote_scope = scope or bool(
+            o.get("promote_scope_metadata")
+        )
+        self._otlp_keep_identifying = keep or bool(
+            o.get("keep_identifying_resource_attributes")
+        )
         if not self._explicit_alertmanagers:
-            from shards_prometheus_spark.sources.scrape_config import (
-                resolve_alertmanagers_full,
-            )
-
+            # the discovery relabel hop: alertmanagers[].relabel_configs
+            # rewrites/drops pool members before any push
             resolved = resolve_alertmanagers_full(self._spark, cfg)
             self._alertmanagers = [u for u, _h in resolved]
             self._am_headers = {u: h for u, h in resolved if h}
@@ -2120,13 +2069,31 @@ class MetricsExposer:
                     u.rstrip("/"): dict(h)
                     for u, h in self._am_headers.items()
                 }
+        self._rule_file = rule_file
         if not self._explicit_external_labels:
             self._external_labels = dict(cfg.external_labels)
         self._keep_dropped_targets = cfg.keep_dropped_targets
         self._dropped_targets = _resolve_dropped_targets(
             self._spark, cfg
         )
-        self._rule_file = new_rules
+
+    def reload_config(self) -> None:
+        """`POST /-/reload` (upstream --web.enable-lifecycle):
+        re-read the prometheus.yml this exposer was constructed from
+        and apply it as the constructor did (`_apply_config`) —
+        `/api/v1/status/config` serves the NEW document from the next
+        request on. A parse failure raises (→ 500) and leaves the
+        previous configuration in force, exactly upstream's
+        failed-reload semantics. A no-path exposer (inline YAML text)
+        re-applies the held text — a successful no-op."""
+        text = self._scrape_config
+        if self._scrape_config_path is not None:
+            with open(self._scrape_config_path) as f:
+                text = f.read()
+        if text is None:
+            return
+        self._apply_config(text)  # raises → keep old config
+        self._scrape_config = text
 
     def handle_api(
         self, path: str, params: dict, method: str = "GET"

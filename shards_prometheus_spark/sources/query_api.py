@@ -497,21 +497,17 @@ def _alert_json(
 
 def _rule_file_firing(evaluator, rule_file: str) -> dict:
     """alertname → [(labels dict, value)]: the rule file's firing set
-    at the evaluator's time (eval_rule_file semantics: in-group
-    chaining + holds). Only the alert legs are collected — the record
-    vectors are filtered out in the plan, where the literal `kind`
-    column prunes them."""
+    at the evaluator's time (rules.rule_file_firing: eval_rule_file
+    semantics — in-group chaining + holds — over the groups that hold
+    an alert rule, the record vectors filtered out in the plan)."""
     from shards_prometheus_spark.operators import rules as R
 
-    rows = (
-        R.eval_rule_file(
-            evaluator.samples.drop("t_max"),
-            rule_file,
-            eval_ts_us=evaluator.eval_time_us(),
-        )
-        .filter(F.col("kind") == "alert")
-        .collect()
+    df = R.rule_file_firing(
+        evaluator.samples.drop("t_max"),
+        rule_file,
+        eval_ts_us=evaluator.eval_time_us(),
     )
+    rows = [] if df is None else df.collect()
     out: dict[str, list] = {}
     for r in rows:
         out.setdefault(r["rule"], []).append(

@@ -283,8 +283,9 @@ def _make_update_alert_keep(for_n: int, keep_us: int):
     for ANY keep/step ratio (the r8 last-true anchor resolved up to
     one step early on non-multiple configs — ADVICE r8). A PENDING
     alert gets no grace — false still resets it. Mirrors the batch
-    closed form in rules.py:eval_alert_keep_group; tests pin the two
-    equal across micro-batch boundaries."""
+    closed form in rules.py:_alert_states (the one batch derivation of
+    firing/pending); tests pin the two equal across micro-batch
+    boundaries."""
 
     def update(
         key: Tuple[Any, ...],
@@ -360,8 +361,8 @@ def alert_state_stream(evals: DataFrame, for_n: int) -> DataFrame:
     output is each alert series' live state machine row. State is two
     ints per alert series (bounded like the reference's registry,
     prometheus.cpp:34-45); the group key (alertname, labels) is the
-    natural shuffle key. The batch twin is the trailing-window grid
-    filter in operators/rules.py:eval_alert_for_group — under
+    natural shuffle key. The batch twin is the run test over the
+    trailing grid in operators/rules.py:_alert_states — under
     streaming the consecutive-true run must live in a state store
     because evaluations for one alert arrive across micro-batches."""
     return (

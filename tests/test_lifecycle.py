@@ -239,3 +239,42 @@ def test_rule_evaluation_loop_pushes_with_cadence(spark):
     finally:
         exposer.stop()
         sink.stop()
+
+
+def test_constructor_and_reload_apply_the_same_config(spark, tmp_path):
+    """The constructor and `/-/reload` apply one prometheus.yml the
+    same way: with an explicit Alertmanager list the config's
+    `rule_files:` still load at start, and a reload adopts a changed
+    `otlp:` section — while the explicit list wins both times."""
+    from shards_prometheus_spark.sources import MetricsExposer
+
+    cfg = tmp_path / "prometheus.yml"
+    cfg.write_text(_CFG_V1)
+    (tmp_path / "rules_v1.yml").write_text(_RULES_V1)
+    (tmp_path / "rules_v2.yml").write_text(_RULES_V2)
+    exposer = MetricsExposer(
+        spark,
+        SF_SMOKE,
+        scrape_config_path=str(cfg),
+        alertmanagers=["http://explicit:9093"],
+    )
+
+    def served() -> tuple:
+        status, payload = exposer.handle_api(
+            "/api/v1/rules", {"exclude_alerts": ["true"]}
+        )
+        assert status == 200
+        return (
+            [g["name"] for g in payload["data"]["groups"]],
+            exposer._alertmanagers,
+            exposer._otlp_promote,
+        )
+
+    assert served() == (["g1"], ["http://explicit:9093"], [])
+    cfg.write_text(
+        _CFG_V2 + "otlp:\n  promote_resource_attributes: [k8s.pod.name]\n"
+    )
+    exposer.reload_config()
+    assert served() == (
+        ["g2"], ["http://explicit:9093"], ["k8s.pod.name"]
+    )

@@ -231,3 +231,209 @@ def test_alerts_rule_file_read_runs_no_extra_jobs(spark):
     plain = jobs(MetricsExposer(spark, SF_SMOKE))
     ruled = jobs(MetricsExposer(spark, SF_SMOKE, rule_file=DEMO_RULE_FILE))
     assert ruled <= plain, (ruled, plain)
+
+
+def _compiles(fn) -> int:
+    """The number of PromQL expressions `fn()` builds a plan for."""
+    calls = []
+    orig = PromQLEvaluator._evaluate
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        return orig(self, *args, **kwargs)
+
+    PromQLEvaluator._evaluate = counted
+    try:
+        fn()
+    finally:
+        PromQLEvaluator._evaluate = orig
+    return len(calls)
+
+
+def test_alert_paths_build_each_alert_rule_once(spark):
+    """The ALERTS leg builds each rule of the file once — the firing
+    set and the alert states are one relation — and `/api/v1/alerts`
+    evaluates only the groups holding an alert rule (the built-in
+    `recording` group's two records change no alert)."""
+    from shards_prometheus_spark.operators.rules import (
+        BUILTIN_RULE_FILE,
+        DEMO_RULE_FILE,
+        load_rule_groups,
+        rule_file_alert_state_samples,
+    )
+    from shards_prometheus_spark.sources import MetricsExposer
+
+    samples = samples_multi(spark, SF_SMOKE)
+    n = _compiles(
+        lambda: rule_file_alert_state_samples(
+            samples, DEMO_RULE_FILE, eval_ts_us=0
+        )
+    )
+    assert n == 4, n  # 2 records + 2 alert rules
+    ex = MetricsExposer(spark, SF_SMOKE)
+    n = _compiles(lambda: ex.handle_api("/api/v1/alerts", {}))
+    alerting = [
+        g for g in load_rule_groups(BUILTIN_RULE_FILE)
+        if any(r["kind"] == "alert" for r in g["rules"])
+    ]
+    assert n == sum(len(g["rules"]) for g in alerting) == 9, n
+
+
+@pytest.mark.parametrize("name", ["DEMO_RULE_FILE", "BUILTIN_RULE_FILE"])
+def test_rule_file_states_equal_recorded(spark, name):
+    """The firing set and the ALERTS / ALERTS_FOR_STATE rows of the
+    demo and built-in rule files on SF_SMOKE equal the rows recorded
+    from the three derivations `_alert_states` replaced (per-rule
+    count, keep state machine, run statistics) — the JSON file next to
+    this one."""
+    import json
+    import os
+
+    from pyspark.sql import functions as F
+
+    from shards_prometheus_spark.functions.promql_parser import (
+        data_time_us,
+    )
+    from shards_prometheus_spark.operators import rules as R
+
+    with open(
+        os.path.join(os.path.dirname(__file__), "rule_states_sf0.001.json")
+    ) as f:
+        want = json.load(f)[name]
+    text = getattr(R, name)
+    samples = samples_multi(spark, SF_SMOKE)
+    t = data_time_us(samples)
+    firing = sorted(
+        [r["rule"], r["labels"], r["value"]]
+        for r in R.eval_rule_file(samples, text, eval_ts_us=t)
+        .filter(F.col("kind") == "alert")
+        .collect()
+    )
+    assert firing == want["firing"]
+    rows = sorted(
+        [r["metric"], [list(kv) for kv in sorted(r["labels"].items())],
+         r["value"]]
+        for r in R.rule_file_alert_state_samples(
+            samples, text, eval_ts_us=t
+        ).collect()
+    )
+    assert rows == want["alerts_rows"]
+
+
+def test_hold_not_a_multiple_of_the_interval(spark):
+    """`for: 90s` on a 1m interval fires only once the run has lasted
+    90s — three true evaluations — with or without
+    `keep_firing_for:`. Series a is true at T-60s and T (60s < 90s:
+    pending), series b at T-120s, T-60s and T (firing); ALERTS and
+    ALERTS_FOR_STATE say the same."""
+    from shards_prometheus_spark.operators.rules import (
+        rule_file_alert_state_samples,
+    )
+
+    _US = 1_000_000
+    t = 1_700_000_100 * _US  # a round minute: the tick is a grid instant
+    rows = [
+        (i, 1 if user == "a" else 2, "m", {"user": user}, t - ago * _US, 5.0)
+        for i, (user, ago) in enumerate(
+            [("a", 60), ("a", 0), ("b", 120), ("b", 60), ("b", 0)]
+        )
+    ]
+    samples = spark.createDataFrame(
+        rows,
+        "event_id long, series_id long, metric string, "
+        "labels map<string,string>, ts_us long, value double",
+    )
+    yml = """
+groups:
+  - name: g
+    interval: 1m
+    rules:
+      - alert: Hold
+        expr: m > 0
+        for: 90s
+      - alert: HoldKeep
+        expr: m > 0
+        for: 90s
+        keep_firing_for: 1m
+"""
+    firing = {
+        (r["rule"], r["labels"])
+        for r in eval_rule_file(samples, yml).collect()
+    }
+    assert firing == {("Hold", "user=b"), ("HoldKeep", "user=b")}
+    series = {
+        (
+            r["metric"],
+            r["labels"]["alertname"],
+            r["labels"]["user"],
+            r["labels"].get("alertstate"),
+            r["value"],
+        )
+        for r in rule_file_alert_state_samples(samples, yml).collect()
+    }
+    t_s = t / _US
+    assert series == {
+        (metric, rule, user, state, value)
+        for rule in ("Hold", "HoldKeep")
+        for user, state, active_at in (
+            ("a", "pending", t_s - 60),
+            ("b", "firing", t_s - 120),
+        )
+        for metric, state, value in (
+            ("ALERTS", state, 1.0),
+            ("ALERTS_FOR_STATE", None, active_at),
+        )
+    }
+
+
+def test_threshold_rules_with_a_non_multiple_hold(spark):
+    """Two same-shape threshold rules with `for: 90m` on a 1h interval,
+    evaluated 45m past an instant: users a (above average at 11h and
+    12h) and d (at 10h, 11h and 12h). Only d's run has lasted 90m, so
+    only d fires — per rule and through `eval_alert_for_group`, whose
+    fused scan counts grid instants and so stays off such rules."""
+    from shards_prometheus_spark.operators.rules import (
+        eval_alert_for_group,
+    )
+
+    H = 3_600_000_000
+    growth = {"a": lambda i: max(0, i - 10) * 10.0, "b": float,
+              "c": lambda i: 0.0, "d": lambda i: 5.0 * i}
+    rows = [
+        (n, sid, m, {"user": u}, i * H, growth[u](i))
+        for n, (sid, m, u, i) in enumerate(
+            (sid, m, u, i)
+            for sid, (m, u) in enumerate(
+                (m, u) for m in ("click", "view") for u in growth
+            )
+            for i in range(1, 13)
+        )
+    ]
+    ev = PromQLEvaluator(
+        spark.createDataFrame(
+            rows,
+            "event_id long, series_id long, metric string, "
+            "labels map<string,string>, ts_us long, value double",
+        ),
+        eval_ts_us=12 * H + 3 * H // 4,
+    )
+    rules = [
+        (
+            f"{m}Above",
+            f"sum by (user) (increase({m}[2h])) > "
+            f"scalar(avg(sum by (user) (increase({m}[2h]))))",
+            3 * H // 2,
+            H,
+        )
+        for m in ("click", "view")
+    ]
+
+    def firing(rs) -> list:
+        return sorted(
+            (r["alertname"], r["labels"])
+            for r in eval_alert_for_group(ev, rs, "alertname").collect()
+        )
+
+    want = [("clickAbove", "user=d"), ("viewAbove", "user=d")]
+    assert firing(rules) == want
+    assert firing(rules[:1]) + firing(rules[1:]) == want
