@@ -11,8 +11,9 @@ primitives so the semantics are defined exactly once:
 - ``label_str(labels)``: canonical sorted `k=v,...` rendering of a
   label set — deterministic across engines (map iteration order is
   not), used as a grouping/join key for arbitrary label sets.
-- ``apply_matchers(df, matchers)``: PromQL matcher filters
-  (`=`, `!=`, `=~`, `!~`; regexes fully anchored) over the map.
+- ``matcher_sql(matchers)``: PromQL matcher filters (`=`, `!=`,
+  `=~`, `!~`; regexes fully anchored) over the map, as one SQL
+  predicate (`apply_matchers` / `matcher_condition` wrap it).
 
 All three are pure Catalyst expressions (element_at / transform /
 rlike) — whole-stage codegen, no UDFs — so a matcher or grouping on
@@ -74,10 +75,18 @@ def label_str(labels: "Column | str") -> Column:
     )
 
 
-def apply_matchers(
-    df: DataFrame, matchers: Iterable[tuple[str, str, str]]
-) -> DataFrame:
-    """PromQL label matchers over the `labels` map column.
+def sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def matcher_sql(
+    matchers: Iterable[tuple[str, str, str]], metric: "str | None" = None
+) -> str:
+    """PromQL label matchers over the `labels` map column as ONE SQL
+    predicate (`metric` equality first when given) — parsed JVM-side
+    in one call, where the same tree built with `F.*` costs a Py4J
+    round trip per node.
 
     ``matchers`` is (label, op, value) triples with op in
     {=, !=, =~, !~}. Missing labels compare as "" and regexes are
@@ -89,42 +98,36 @@ def apply_matchers(
     ``\\n`` from ``.``; a label value like ``"a\\r0"`` would then
     diverge from Prometheus on ``=~"a.*|[0-4]"``.
     """
+    terms = [] if metric is None else [f"metric = {sql_str(metric)}"]
     for label, op, val in matchers:
-        col = label_col(label)
-        anchored = f"(?d)^(?:{val})\\z"
+        col = f"coalesce(element_at(labels, {sql_str(label)}), '')"
+        anchored = sql_str(f"(?d)^(?:{val})\\z")
         if op == "=":
-            df = df.filter(col == val)
+            terms.append(f"{col} = {sql_str(val)}")
         elif op == "!=":
-            df = df.filter(col != val)
+            terms.append(f"{col} != {sql_str(val)}")
         elif op == "=~":
-            df = df.filter(col.rlike(anchored))
+            terms.append(f"{col} RLIKE {anchored}")
         elif op == "!~":
-            df = df.filter(~col.rlike(anchored))
+            terms.append(f"NOT {col} RLIKE {anchored}")
         else:  # pragma: no cover - parser only emits the four ops
             raise ValueError(f"unknown matcher op: {op}")
-    return df
+    return " AND ".join(f"({t})" for t in terms) or "true"
+
+
+def apply_matchers(
+    df: DataFrame, matchers: Iterable[tuple[str, str, str]]
+) -> DataFrame:
+    """`df` filtered by PromQL label matchers (`matcher_sql`)."""
+    matchers = list(matchers)
+    return df.filter(F.expr(matcher_sql(matchers))) if matchers else df
 
 
 def matcher_condition(
     metric: str, matchers: Iterable[tuple[str, str, str]]
 ) -> Column:
-    """The same matcher semantics as `apply_matchers`, as ONE boolean
-    Column (metric equality ∧ every matcher) — for callers that need
-    the NEGATION (tombstone masking: `df.filter(~cond)`), which a
-    sequence of `.filter` calls cannot express."""
-    cond = F.col("metric") == metric
-    for label, op, val in matchers:
-        col = label_col(label)
-        anchored = f"(?d)^(?:{val})\\z"
-        if op == "=":
-            c = col == val
-        elif op == "!=":
-            c = col != val
-        elif op == "=~":
-            c = col.rlike(anchored)
-        elif op == "!~":
-            c = ~col.rlike(anchored)
-        else:  # pragma: no cover - parser only emits the four ops
-            raise ValueError(f"unknown matcher op: {op}")
-        cond = cond & c
-    return cond
+    """The metric equality ∧ every matcher (`matcher_sql`) as ONE
+    boolean Column — for callers that need the NEGATION (tombstone
+    masking: `df.filter(~cond)`), which a sequence of `.filter` calls
+    cannot express."""
+    return F.expr(matcher_sql(matchers, metric))

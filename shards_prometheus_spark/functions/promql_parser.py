@@ -47,12 +47,14 @@ note); range functions other than rate/increase directly on
 Evaluation model: one evaluator. Every expression compiles against a
 grid of evaluation instants (`_ets`) into one declarative plan —
 filters on metric reach the parquet scan, range windows become
-per-(series, instant) aggregations, label grouping is
-``element_at(labels, k)``. A range query's grid is a ≤(span/step+1)-row
-derived relation broadcast against the samples scan; an instant query
-is the one-point grid at T = the max sample timestamp (or the pinned
-evaluation time), a driver int that enters the plan as a literal
-column, so its leaves filter a literal window with no grid join.
+per-(series, instant) aggregations, label grouping is a group key on
+the label map (by()/without() filter it). A range query's grid is a
+≤(span/step+1)-row derived relation broadcast against the samples scan;
+an instant query is the one-point grid at T = the max sample timestamp
+(or the pinned evaluation time), a driver int that enters the plan as
+a literal, so its leaves filter a literal window with no grid join.
+Each AST node costs one analysed DataFrame operation
+(`PromQLEvaluator`).
 Subquery grids are the same ≤(range/step+1)-row relations. Everything
 compiles to the same shapes the registered operators use, so the scale
 properties (pushdown, map-side partials, no cartesians, no
@@ -68,8 +70,8 @@ from __future__ import annotations
 
 import math
 import re
-from dataclasses import dataclass, field
-from functools import cached_property
+from dataclasses import dataclass, field, fields, is_dataclass
+from functools import cached_property, lru_cache
 from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -78,6 +80,8 @@ from pyspark.sql import functions as F
 from shards_prometheus_spark.functions.labelset import (
     apply_matchers,
     label_str as _labelset_str,
+    matcher_sql,
+    sql_str,
 )
 from shards_prometheus_spark.model import samples_multi
 from shards_prometheus_spark.operators.histograms import BOUNDS
@@ -125,6 +129,18 @@ _TOPK_OPS = {"topk", "bottomk"}
 #: limit_ratio = series whose md5(label string) prefix falls below the
 #: ratio threshold (complementary ratios partition the vector)
 _LIMIT_OPS = {"limitk", "limit_ratio"}
+#: the aggregations that fold on the grouped label set (`_gagg`)
+_LABEL_AGGS = _AGG_OPS | {"count_values"}
+#: (aggregation, range fold) pairs whose answer is the fold of each
+#: group's pooled window samples — a sum of per-series sums or counts
+#: is the group's sum or count, a min of minima its minimum, a max of
+#: maxima its maximum — as SQL text (`_gagg`)
+_POOLED_FOLDS = {
+    ("sum", "sum_over_time"): "sum(value)",
+    ("sum", "count_over_time"): "CAST(count(1) AS DOUBLE)",
+    ("min", "min_over_time"): "min(value)",
+    ("max", "max_over_time"): "max(value)",
+}
 _SORT_FNS = {"sort", "sort_desc"}
 _SORT_BY_LABEL_FNS = {"sort_by_label", "sort_by_label_desc"}
 _RANGE_FNS = {
@@ -199,7 +215,8 @@ _SUBQ_LAG_FNS = {
 #: scan (before the broadcast grid join) — the windows are contiguous
 #: time intervals, so consecutive-in-window pairs are exactly the
 #: consecutive-global pairs whose predecessor timestamp lies inside
-#: the window (`_pts > _wlo`), and the per-(series, instant) fold
+#: the window (`_pts > ` the window start), and the per-(series,
+#: instant) fold
 #: becomes a hash aggregate with map-side partials: the w×-multiplied
 #: rows are consumed before any exchange instead of being shuffled
 #: and sorted per instant (guide §2.3 — aggregate before you shuffle).
@@ -1148,6 +1165,35 @@ def parse(expr: str):
     return _Parser(_tokenize(expr)).parse()
 
 
+def _read_metrics(node):
+    """The metric names the selectors under `node` read: a `_bucket`
+    selector also reads its base metric, info() its info metric."""
+    if isinstance(node, Selector):
+        yield node.metric
+        if node.metric.endswith(_BUCKET_SUFFIX):
+            yield node.metric[: -len(_BUCKET_SUFFIX)]
+        return
+    if isinstance(node, InfoFn):
+        names = [m[2] for m in node.matchers if m[0] == "__name__"]
+        yield from names or ["target_info"]
+    if is_dataclass(node):
+        for f in fields(node):
+            v = getattr(node, f.name)
+            for child in v if isinstance(v, list) else [v]:
+                yield from _read_metrics(child)
+
+
+def selects_metric(expr: str, names: "set[str]") -> bool:
+    """Whether some selector of `expr` can read a metric in `names`.
+    An expression that does not parse answers True: its caller keeps
+    every input and lets evaluation report the error."""
+    try:
+        node = parse(expr)
+    except ValueError:
+        return True
+    return any(m in names for m in _read_metrics(node))
+
+
 def _mad_agg() -> Column:
     """`mad_over_time`: median(|x − median(x)|) as ONE aggregate
     expression — scalar quantile math (φ·(n−1) rank linear
@@ -1174,6 +1220,20 @@ def _mad_agg() -> Column:
     return q(dev, n)
 
 
+#: the `*_over_time` folds that are one plain aggregate of the window's
+#: values, as SQL text (`_sql`)
+_SIMPLE_FOLDS = {
+    "avg_over_time": "avg(value)",
+    "min_over_time": "min(value)",
+    "max_over_time": "max(value)",
+    "sum_over_time": "sum(value)",
+    "count_over_time": "CAST(count(1) AS DOUBLE)",
+    "stddev_over_time": "stddev_pop(value)",
+    "stdvar_over_time": "var_pop(value)",
+    "present_over_time": "max(1.0D)",
+}
+
+
 def _subq_outer(fn: str, param: float | None):
     """Outer fold aggregate for ``fn(inner[r:s])`` (`_gsubquery`). The
     subquery's
@@ -1182,21 +1242,13 @@ def _subq_outer(fn: str, param: float | None):
     interpolation, the same spec as the range-selector fold at
     `_range_fold`). Returns None for fns folded elsewhere (the lag
     family and last_over_time have their own spines)."""
-    table = {
-        "avg_over_time": lambda: F.avg("value"),
-        "min_over_time": lambda: F.min("value"),
-        "max_over_time": lambda: F.max("value"),
-        "sum_over_time": lambda: F.sum("value"),
-        "count_over_time": lambda: F.count(F.lit(1)).cast("double"),
-        "stddev_over_time": lambda: F.stddev_pop("value"),
-        "stdvar_over_time": lambda: F.var_pop("value"),
-        "quantile_over_time": lambda: F.percentile(
-            F.col("value"), F.lit(float(param or 0.0))
-        ),
-        "mad_over_time": _mad_agg,
-    }
-    make = table.get(fn)
-    return make() if make is not None else None
+    if fn in _SIMPLE_FOLDS:
+        return _sql(_SIMPLE_FOLDS[fn])
+    if fn == "quantile_over_time":
+        return F.percentile(F.col("value"), F.lit(float(param or 0.0)))
+    if fn == "mad_over_time":
+        return _mad_agg()
+    return None
 
 
 # --------------------------------------------------------------------------
@@ -1255,9 +1307,56 @@ def _no_labels() -> Column:
     return F.map_from_arrays(F.array(), F.array()).alias("labels")
 
 
+@lru_cache(maxsize=256)
+def _sql(text: str) -> Column:
+    """A Column from SQL text, built once per process: one Py4J call
+    where the same tree spelled with `F.*` costs one per node. Columns
+    are immutable expression trees, so plans may share them; alias
+    them per use."""
+    return F.expr(text)
+
+
+def _agg_labels(mode: str, by: "list[str]") -> str:
+    """The output label set of a by()/without() aggregation, as SQL
+    text over `labels`: `by` keeps the listed labels a series has,
+    `without` drops them."""
+    names = ", ".join(sql_str(b) for b in by)
+    if not by:
+        return "labels" if mode == "without" else (
+            "CAST(map() AS map<string,string>)"
+        )
+    neg = "NOT " if mode == "without" else ""
+    return f"map_filter(labels, (k, v) -> {neg}k IN ({names}))"
+
+
 def _fmt_le(b: float) -> str:
     """Prometheus-style bucket bound rendering ('1', '2.5', '+Inf')."""
     return str(int(b)) if float(b) == int(b) else str(b)
+
+
+@dataclass(frozen=True)
+class _Render:
+    """A response's columns: `ts_us` on a range response, the label
+    set as its canonical string or as the map, and `value`."""
+
+    ts: bool
+    label_str: bool
+
+    def keys(
+        self, labels: "Column | str", ets: "Column | None" = None
+    ) -> "list[Column]":
+        """The `ts_us` and `labels` columns, from the label map and
+        the instant (default the `_ets` column)."""
+        if self.label_str:
+            labels = _label_str(labels)
+        elif isinstance(labels, str):
+            labels = F.col(labels)
+        if ets is None:
+            ets = F.col("_ets")
+        return [
+            *([ets.alias("ts_us")] if self.ts else []),
+            labels.alias("labels"),
+        ]
 
 
 @dataclass(frozen=True)
@@ -1271,8 +1370,8 @@ class _Grid:
     leaves pre-filter their scan on it. `span` is the query range's
     end - start, which `@ start()` subtracts from t_max. `point` is set
     when the grid is exactly one driver-known instant (every instant
-    query): leaves then filter a literal window and attach `_ets` as a
-    literal column instead of joining the grid."""
+    query): leaves then filter a literal window, and their folds key
+    on the literal instant, instead of joining the grid."""
 
     build: Callable[[], DataFrame]
     bounds: "tuple[int, int] | None"
@@ -1324,7 +1423,18 @@ class PromQLEvaluator:
     (upstream defines a range query as the instant query at each
     step). The public entry points only pick the grid and the
     rendering. `t_max` (the evaluation time) is a driver int, carried
-    into plans as a literal column, never collected.
+    into plans as a literal, never collected.
+
+    One analysed DataFrame operation per AST node: each operation is a
+    JVM analysis of the whole plan so far over the read's union, so a
+    leaf is one filter, a fold or aggregation one `groupBy().agg()`
+    (its result computed inside the aggregate, not in a projection
+    after it), and the root aggregation renders the response columns
+    in that same aggregate. Folds and aggregations group on the label
+    map itself: Spark sorts a map group key's entries (`mapsort`), so
+    label sets merge whatever order their maps list keys in, output
+    maps come out in sorted key order (upstream's order), and with no
+    map in an aggregate buffer the node plans as a HashAggregate.
     """
 
     def __init__(self, samples: DataFrame, eval_ts_us: int | None = None):
@@ -1333,28 +1443,30 @@ class PromQLEvaluator:
         `eval_ts_us` pins the evaluation time ("now") explicitly — the
         HTTP API's `time`/`end` parameters; default is the data's max
         timestamp (the batch analog of a live server's wall clock)."""
-        # t_max materialized EAGERLY (one collect of a 1-row aggregate,
-        # rebuilt as a literal relation): the lazy aggregate's subtree
-        # would otherwise be embedded at every self.samples reference,
-        # so each selector leaf would scan the corpus TWICE (once for
-        # the max, once for data) — at 100 TB that doubles every PromQL
-        # query's read volume. A driver-side literal (not
-        # localCheckpoint) survives executor loss/decommission on a
-        # real cluster: checkpoint blocks are executor-resident state,
-        # a collected scalar is not.
+        # t_max is driver state (one collect of a 1-row aggregate when
+        # not pinned): a lazy aggregate's subtree would be embedded at
+        # every selector leaf, scanning the corpus twice per query,
+        # and a collected scalar survives executor loss where a
+        # checkpoint does not. It enters plans as a literal, so
+        # construction builds no DataFrame (each one is a JVM
+        # analysis over the whole read union).
         if eval_ts_us is None:
             eval_ts_us = data_time_us(samples)
         self._tmax_us = int(eval_ts_us)
-        self._tmax = samples.sparkSession.createDataFrame(
-            [(eval_ts_us,)], "t_max bigint"
-        )
         #: the grid the expression being compiled is evaluated on
         self._g: _Grid | None = None
-        # t_max as a LITERAL column: the pinned int is driver state,
-        # so attaching it via a 1-row broadcast join cost one
-        # BroadcastNestedLoopJoin + BroadcastExchange per selector
-        # leaf of every query (guide §2.4: remove exchanges outright)
-        self.samples = samples.withColumn("t_max", F.lit(self._tmax_us))
+        self.samples = samples
+
+    @cached_property
+    def _stale(self) -> bool:
+        """Whether the samples carry staleness markers (read once: a
+        schema probe is a JVM call)."""
+        return "stale" in self.samples.columns
+
+    def _range(self, n: int) -> DataFrame:
+        """The one-partition relation `id` = 0..n-1 that grids are
+        derived from."""
+        return self.samples.sparkSession.range(0, n, 1, 1)
 
     def eval_time_us(self) -> int:
         """The pinned evaluation time — instant-vector responses stamp
@@ -1376,25 +1488,25 @@ class PromQLEvaluator:
         self,
         sel: Selector,
         keep_stale: bool = False,
-        where: "Column | None" = None,
+        where: "str | None" = None,
     ) -> DataFrame:
-        # Matcher semantics (missing label == "", anchored regexes)
-        # live in functions.labelset, shared with MetricsRegistry.
-        # Staleness markers (a `stale` boolean column, synthesized by
-        # the scrape loop's tick-over-tick diff) are EXCLUDED from
-        # every selection by default — upstream never returns StaleNaN
-        # in a range vector — except for the instant-selector pick,
-        # which needs the marker rows to cut the lookback
-        # (keep_stale=True, then a post-pick filter drops series whose
-        # newest sample is stale). `where` joins the metric filter
-        # (one DataFrame op — each op is a JVM analysis).
-        cond = F.col("metric") == sel.metric
+        """The selector's rows as ONE filter from one SQL predicate
+        (each DataFrame op is a JVM analysis, each `F.*` node a Py4J
+        round trip): metric, matchers (semantics in functions.labelset,
+        shared with MetricsRegistry), the caller's `where` (a leaf's
+        time span) and the staleness cut. Staleness markers (a `stale`
+        boolean column, synthesized by the scrape loop's tick-over-tick
+        diff) are EXCLUDED by default — upstream never returns StaleNaN
+        in a range vector — except for the instant-selector pick, which
+        needs the marker rows to cut the lookback (keep_stale=True,
+        then a post-pick filter drops series whose newest sample is
+        stale)."""
+        cond = matcher_sql(sel.matchers, sel.metric)
         if where is not None:
-            cond = cond & where
-        df = apply_matchers(self.samples.filter(cond), sel.matchers)
-        if not keep_stale and "stale" in df.columns:
-            df = df.filter(~F.coalesce(F.col("stale"), F.lit(False)))
-        return df
+            cond += f" AND {where}"
+        if not keep_stale and self._stale:
+            cond += " AND NOT coalesce(stale, false)"
+        return self.samples.filter(F.expr(cond))
 
     # -- synthetic histogram bucket series -------------------------------
     def _bucket_base(self, sel: Selector) -> Selector:
@@ -1419,50 +1531,39 @@ class PromQLEvaluator:
         le_ms = [m for m in sel.matchers if m[0] == "le"]
         return apply_matchers(df, le_ms) if le_ms else df
 
-    def _bucket_cum(self, windowed: DataFrame) -> DataFrame:
+    def _bucket_cum(
+        self, windowed: DataFrame, per_s: "float | None"
+    ) -> DataFrame:
         """Cumulative le-bucket observation counts per series — the
         counters a prometheus-cpp histogram family exports
         (prometheus.cpp:277-293; cumulative exposition is the public
-        text-format convention). The bound list is a module constant,
-        so each bucket is one conditional-sum COLUMN of a single
-        (series, extra_keys) hash aggregate, exploded to rows after —
-        the old broadcast crossJoin multiplied the windowed scan
+        text-format convention) — as (_ets, labels, value), divided by
+        `per_s` seconds when set (rate). The bound list is a module
+        constant, so each bucket is one conditional-sum COLUMN of a
+        single (series, _ets) aggregate, inlined to rows after — the
+        old broadcast crossJoin multiplied the windowed scan
         ×(len(BOUNDS)+1) BEFORE the exchange, shuffling 9× the rows
         for identical counts (guide §2.3: aggregate before you
-        shuffle). The grid instant ``_ets`` widens the aggregate key and
-        passes through to the output."""
-        bounds = [(_fmt_le(b), float(b)) for b in BOUNDS] + [
-            ("+Inf", float("inf"))
+        shuffle)."""
+        bounds = [(_fmt_le(b), repr(float(b))) for b in BOUNDS] + [
+            ("+Inf", "'Infinity'")
         ]
-        sums = windowed.groupBy("series_id", self._gkey()).agg(
-            F.first("labels").alias("labels"),
+        sums = windowed.groupBy("series_id", self._gkey(), "labels").agg(
             *[
-                F.sum(
-                    F.when(F.col("value") <= F.lit(num), 1).otherwise(0)
-                )
-                .cast("double")
-                .alias(f"_c{i}")
+                _sql(
+                    f"CAST(sum(IF(value <= CAST({num} AS DOUBLE), 1, 0))"
+                    " AS DOUBLE)"
+                ).alias(f"_c{i}")
                 for i, (_s, num) in enumerate(bounds)
             ],
         )
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(s).alias("le"), F.col(f"_c{i}").alias("cum")
-                )
-                for i, (s, _num) in enumerate(bounds)
-            ]
+        div = f" / CAST('{per_s!r}' AS DOUBLE)" if per_s is not None else ""
+        rows = ", ".join(
+            f"named_struct('labels', map_concat(labels, map('le', '{s}')),"
+            f" 'value', _c{i}{div})"
+            for i, (s, _num) in enumerate(bounds)
         )
-        return sums.select(
-            "_ets", "labels", F.explode(entries).alias("_e")
-        ).select(
-            "_ets",
-            F.map_concat(
-                F.col("labels"),
-                F.create_map(F.lit("le"), F.col("_e.le")),
-            ).alias("labels"),
-            F.col("_e.cum").alias("cum"),
-        )
+        return sums.select("_ets", _sql(f"inline(array({rows}))"))
 
     # -- range functions -------------------------------------------------
     def _range_fold(
@@ -1473,37 +1574,36 @@ class PromQLEvaluator:
         range_us: int,
         param: float | None = None,
         param2: float | None = None,
+        xref: "Column | None" = None,
+        lagged: bool = False,
+        wlo: "Column | None" = None,
     ) -> DataFrame:
-        """Fold a windowed sample frame to one value per key tuple:
-        (series, instant) for a range function over a selector
-        (`_gseries`), (instant, series) for a subquery's outer fold.
-        Every fold returns exactly (keys…, labels, value)."""
-        if fn in {"avg_over_time", "min_over_time", "max_over_time",
-                  "sum_over_time", "count_over_time",
-                  "stddev_over_time", "stdvar_over_time"}:
+        """Fold a windowed sample frame to one value per (keys…,
+        label set): (series, instant) for a range function over a
+        selector (`_gseries`), (instant[, series]) for a subquery's
+        outer fold. The label map itself is a group key (Spark sorts a
+        map group key's entries, so label sets merge whatever order
+        their maps list keys in, and no map sits in an aggregate
+        buffer). Returns (keys…, labels, value), plus helper columns on
+        some folds. The only Column key is `_gkey()`'s literal instant,
+        named `_ets`. `xref` is the regression x-axis origin of
+        deriv/predict_linear; `lagged` says `df` carries `_lagged`'s
+        predecessor columns, and `wlo` is then the per-instant window
+        start on a multi-point grid."""
+        names = [c if isinstance(c, str) else "_ets" for c in keys]
+        g = df.groupBy(*keys, "labels")
+        if fn in _SIMPLE_FOLDS:
             # stddev/stdvar: population moments of the raw samples
             # (both engines read identical parquet doubles, so the only
             # cross-engine noise is summation order — handled by the
             # output pin like every other fold)
-            # built on demand: each Column is a Py4J round trip
-            agg = {
-                "avg_over_time": lambda: F.avg("value"),
-                "min_over_time": lambda: F.min("value"),
-                "max_over_time": lambda: F.max("value"),
-                "sum_over_time": lambda: F.sum("value"),
-                "count_over_time": lambda: F.count(F.lit(1)).cast("double"),
-                "stddev_over_time": lambda: F.stddev_pop("value"),
-                "stdvar_over_time": lambda: F.var_pop("value"),
-            }[fn]()
-            return df.groupBy(*keys).agg(
-                F.first("labels").alias("labels"), agg.alias("value")
-            )
+            return g.agg(_sql(_SIMPLE_FOLDS[fn]).alias("value"))
         if fn in {"deriv", "predict_linear"}:
             # least-squares over (x = seconds before eval time, y =
             # value); regr_slope/intercept are NULL below 2 distinct
             # points — those series drop out, per PromQL. The 6dp pin
             # on the result is the cross-engine determinism spec.
-            x = (F.col("ts_us") - F.col("_xref")).cast("double") / F.lit(1e6)
+            x = (F.col("ts_us") - xref).cast("double") / F.lit(1e6)
             slope = F.regr_slope(F.col("value"), x)
             if fn == "deriv":
                 val = F.round(slope, 6)
@@ -1513,10 +1613,8 @@ class PromQLEvaluator:
                     + slope * F.lit(float(param or 0.0)),
                     6,
                 )
-            return (
-                df.groupBy(*keys)
-                .agg(F.first("labels").alias("labels"), val.alias("value"))
-                .filter(F.col("value").isNotNull())
+            return g.agg(val.alias("value")).filter(
+                F.col("value").isNotNull()
             )
         if fn in {"holt_winters", "double_exponential_smoothing"}:
             # Double exponential smoothing, the public Prometheus
@@ -1541,9 +1639,7 @@ class PromQLEvaluator:
                 "acc -> acc.s)"
             )
             return (
-                df.groupBy(*keys)
-                .agg(
-                    F.first("labels").alias("labels"),
+                g.agg(
                     F.array_sort(
                         F.collect_list(
                             F.struct("ts_us", "event_id", "value")
@@ -1551,7 +1647,7 @@ class PromQLEvaluator:
                     ).alias("vals"),
                 )
                 .filter(F.size("vals") >= 2)
-                .select(*keys, "labels", F.expr(fold).alias("value"))
+                .select(*names, "labels", F.expr(fold).alias("value"))
             )
         if fn in _TS_OF_FNS:
             # experimental 3.x: the timestamp (unix seconds) of the
@@ -1579,16 +1675,12 @@ class PromQLEvaluator:
                         F.col("ts_us").alias("t"),
                     )
                 )["t"]
-            return df.groupBy(*keys).agg(
-                F.first("labels").alias("labels"),
-                (ts.cast("double") / F.lit(1e6)).alias("value"),
-            )
+            return g.agg((ts.cast("double") / F.lit(1e6)).alias("value"))
         if fn == "quantile_over_time":
             # φ·(n-1) rank linear interpolation over the RAW windowed
             # samples (bit-identical parquet doubles on both engines —
             # no accumulation to pin)
-            return df.groupBy(*keys).agg(
-                F.first("labels").alias("labels"),
+            return g.agg(
                 F.percentile(
                     F.col("value"), F.lit(float(param or 0.0))
                 ).alias("value"),
@@ -1597,135 +1689,80 @@ class PromQLEvaluator:
             # median absolute deviation from the median — the single
             # aggregate expression works under any key set (plain
             # series, grid instants, subquery folds alike)
-            return df.groupBy(*keys).agg(
-                F.first("labels").alias("labels"),
-                _mad_agg().alias("value"),
-            )
-        if fn == "present_over_time":
-            return df.groupBy(*keys).agg(
-                F.first("labels").alias("labels"),
-                F.max(F.lit(1.0)).alias("value"),
-            )
+            return g.agg(_mad_agg().alias("value"))
         if fn == "last_over_time":
-            # newest sample per key as ONE hash aggregate: max over
-            # the (ts_us, event_id, value) struct IS the desc
-            # row_number pick (event_id is unique, so the comparison
-            # never reaches value) — no per-key sort, and on the grid
-            # paths the w×-multiplied rows fold map-side instead of
-            # being shuffled for a window (guide §2.3)
-            mx = F.max(
-                F.struct(
-                    F.col("ts_us").alias("t"),
-                    F.col("event_id").alias("e"),
-                    F.col("value").cast("double").alias("v"),
-                )
-            )
-            return (
-                df.groupBy(*keys)
-                .agg(F.first("labels").alias("labels"), mx.alias("_m"))
-                .select(*keys, "labels", F.col("_m.v").alias("value"))
+            # newest sample per key as ONE aggregate: max over the
+            # (ts_us, event_id, value) struct IS the desc row_number
+            # pick (event_id is unique, so the comparison never
+            # reaches value) — no per-key sort, and on the grid paths
+            # the w×-multiplied rows fold map-side instead of being
+            # shuffled for a window (guide §2.3)
+            return g.agg(
+                _sql(
+                    "max(named_struct('t', ts_us, 'e', event_id, "
+                    "'v', CAST(value AS DOUBLE))).v"
+                ).alias("value")
             )
         if fn == "delta":
             # newest minus oldest sample — two extremum structs of one
-            # hash aggregate (same pick as the rn_d/rn_a windows; the
+            # aggregate (same pick as the rn_d/rn_a windows; the
             # unique event_id keeps the struct order total)
-            sample = F.struct(
-                F.col("ts_us").alias("t"),
-                F.col("event_id").alias("e"),
-                F.col("value").alias("v"),
+            sample = "named_struct('t', ts_us, 'e', event_id, 'v', value)"
+            return g.agg(
+                _sql(f"max({sample}).v - min({sample}).v").alias("value")
             )
-            return df.groupBy(*keys).agg(
-                F.first("labels").alias("labels"),
-                (F.max(sample)["v"] - F.min(sample)["v"]).alias("value"),
-            )
-        if fn in _LAG_SPINE_FNS and "_pts" in df.columns:
+        if fn in _LAG_SPINE_FNS and lagged:
             # predecessors were precomputed per series on the
             # UNMULTIPLIED scan (`_lagged`): a pair counts iff the
             # predecessor also lies inside this key's window
-            # (`_pts > _wlo`; the in-window rows are a contiguous run
+            # (`_pts > wlo`; the in-window rows are a contiguous run
             # of the global (ts_us, event_id) order, so those pairs
             # are exactly the windowed-lag pairs). Each fold is then
-            # one hash aggregate with map-side partials — the w×
-            # row multiplication never crosses an exchange.
+            # one aggregate with map-side partials — the w× row
+            # multiplication never crosses an exchange — and one
+            # filter on whether the window held a pair.
             ok = F.col("_pts").isNotNull()
-            if "_wlo" in df.columns:
-                ok = ok & (F.col("_pts") > F.col("_wlo"))
-            clamped = F.when(
-                F.col("value") < F.col("_pv"), F.col("value")
-            ).otherwise(F.col("value") - F.col("_pv"))
-            if fn in {"increase", "rate"}:
-                out = (
-                    df.groupBy(*keys)
-                    .agg(
-                        F.first("labels").alias("labels"),
-                        F.sum(F.when(ok, clamped)).alias("value"),
-                        F.max(ok.cast("int")).alias("_any"),
-                    )
-                    .filter(F.col("_any") == 1)
-                    .select(*keys, "labels", "value")
-                )
-                if fn == "rate":
-                    out = out.withColumn(
-                        "value", F.col("value") / F.lit(range_us / 1e6)
-                    )
-                return out
+            if wlo is not None:
+                ok = ok & (F.col("_pts") > wlo)
             if fn in {"irate", "idelta"}:
-                mx = F.max(
-                    F.struct(
-                        F.col("ts_us").alias("t"),
-                        F.col("event_id").alias("e"),
-                        F.col("value").alias("v"),
-                        F.col("_pv").alias("pv"),
-                        F.col("_pts").alias("pts"),
-                    )
+                last = (
+                    "max(named_struct('t', ts_us, 'e', event_id, "
+                    "'v', value, 'pv', _pv, 'pts', _pts))"
                 )
-                extra = (
-                    [F.max("_wlo").alias("_wl")]
-                    if "_wlo" in df.columns
-                    else []
-                )
-                g = df.groupBy(*keys).agg(
-                    F.first("labels").alias("labels"),
-                    mx.alias("_m"),
-                    *extra,
-                )
-                valid = F.col("_m.pts").isNotNull()
-                if extra:
-                    valid = valid & (F.col("_m.pts") > F.col("_wl"))
-                iv = F.col("_m.v") - F.col("_m.pv")
+                iv = f"{last}.v - {last}.pv"
                 if fn == "irate":
-                    iv = F.when(
-                        F.col("_m.v") < F.col("_m.pv"), F.col("_m.v")
-                    ).otherwise(iv)
-                return g.filter(valid).select(
-                    *keys, "labels", iv.alias("value")
+                    iv = f"IF({last}.v < {last}.pv, {last}.v, {iv})"
+                valid = _sql(f"{last}.pts").isNotNull()
+                if wlo is not None:
+                    valid = valid & (_sql(f"{last}.pts") > F.max(wlo))
+                return g.agg(
+                    _sql(iv).alias("value"), valid.alias("_ok")
+                ).filter(F.col("_ok"))
+            if fn in {"increase", "rate"}:
+                clamped = _sql("IF(value < _pv, value, value - _pv)")
+                value = F.sum(F.when(ok, clamped))
+                if fn == "rate":
+                    value = value / F.lit(range_us / 1e6)
+            else:  # resets / changes
+                flag = _sql(
+                    "value < _pv" if fn == "resets" else "value != _pv"
                 )
-            # resets / changes
-            flag = (
-                (F.col("value") < F.col("_pv"))
-                if fn == "resets"
-                else (F.col("value") != F.col("_pv"))
-            )
-            return (
-                df.groupBy(*keys)
-                .agg(
-                    F.first("labels").alias("labels"),
-                    F.sum(F.when(ok & flag, 1).otherwise(0))
-                    .cast("double")
-                    .alias("value"),
-                    F.max(ok.cast("int")).alias("_any"),
+                value = F.sum(F.when(ok & flag, 1).otherwise(0)).cast(
+                    "double"
                 )
-                .filter(F.col("_any") == 1)
-                .select(*keys, "labels", "value")
-            )
+            return g.agg(
+                value.alias("value"), F.max(ok).alias("_ok")
+            ).filter(F.col("_ok"))
         # order-dependent fns over point relations without a
         # precomputed lag (the subquery OUTER folds — grid-sized
-        # groups) share the windowed lag spine
-        w = Window.partitionBy(*keys).orderBy("ts_us", "event_id")
+        # groups) share the windowed lag spine; a window cannot
+        # partition on a map, so it partitions on the label string
+        part = [*keys, _label_str("labels")]
+        w = Window.partitionBy(*part).orderBy("ts_us", "event_id")
         d = df.withColumn("prev", F.lag("value").over(w)).withColumn(
             "rn_d",
             F.row_number().over(
-                Window.partitionBy(*keys).orderBy(
+                Window.partitionBy(*part).orderBy(
                     F.desc("ts_us"), F.desc("event_id")
                 )
             ),
@@ -1733,32 +1770,21 @@ class PromQLEvaluator:
         clamped = F.when(
             F.col("value") < F.col("prev"), F.col("value")
         ).otherwise(F.col("value") - F.col("prev"))
+        if fn in {"irate", "idelta"}:
+            # idelta: raw last-pair difference (gauge semantics — no
+            # counter reset clamp)
+            last = clamped if fn == "irate" else (
+                F.col("value") - F.col("prev")
+            )
+            return d.filter(
+                (F.col("rn_d") == 1) & F.col("prev").isNotNull()
+            ).select(*names, "labels", last.alias("value"))
+        gd = d.filter(F.col("prev").isNotNull()).groupBy(*keys, "labels")
         if fn in {"increase", "rate"}:
-            out = d.filter(F.col("prev").isNotNull()).groupBy(*keys).agg(
-                F.first("labels").alias("labels"),
-                F.sum(clamped).alias("value"),
-            )
+            total = F.sum(clamped)
             if fn == "rate":
-                out = out.withColumn(
-                    "value", F.col("value") / F.lit(range_us / 1e6)
-                )
-            return out
-        if fn == "irate":
-            return (
-                d.filter((F.col("rn_d") == 1) & F.col("prev").isNotNull())
-                .select(*keys, "labels", clamped.alias("value"))
-            )
-        if fn == "idelta":
-            # raw last-pair difference (gauge semantics — no counter
-            # reset clamp)
-            return (
-                d.filter((F.col("rn_d") == 1) & F.col("prev").isNotNull())
-                .select(
-                    *keys,
-                    "labels",
-                    (F.col("value") - F.col("prev")).alias("value"),
-                )
-            )
+                total = total / F.lit(range_us / 1e6)
+            return gd.agg(total.alias("value"))
         if fn in {"resets", "changes"}:
             # both count discrete events on the lag spine; the compare
             # is on raw parquet doubles (no accumulation), so equality
@@ -1768,15 +1794,10 @@ class PromQLEvaluator:
                 if fn == "resets"
                 else (F.col("value") != F.col("prev"))
             )
-            return (
-                d.filter(F.col("prev").isNotNull())
-                .groupBy(*keys)
-                .agg(
-                    F.first("labels").alias("labels"),
-                    F.sum(F.when(flag, 1).otherwise(0))
-                    .cast("double")
-                    .alias("value"),
-                )
+            return gd.agg(
+                F.sum(F.when(flag, 1).otherwise(0))
+                .cast("double")
+                .alias("value"),
             )
         raise PromQLSyntaxError(f"unsupported range function {fn!r}")
 
@@ -1785,38 +1806,20 @@ class PromQLEvaluator:
         """Step-aligned evaluation instants t ∈ (T'-range, T'],
         T' = t_max - offset, t ≡ 0 (mod step) relative to T' floor —
         a ≤(range/step + 1)-row derived relation, always broadcast."""
-        n = int(sub.range_us // sub.step_us) + 1
-        step, off = sub.step_us, sub.offset_us
-        t_ref = (
-            "t_max"
-            if sub.at_us is None or sub.at_us < 0  # @ start()/end() ≡ t_max
-            else str(sub.at_us)
-        )
-        return (
-            self._tmax.select(
-                F.col("t_max"),
-                F.explode(F.sequence(F.lit(0), F.lit(n))).alias("_i"),
-            )
-            .select(
-                F.col("t_max"),
-                # bigint(_i): _i and a sub-2³¹ step are both SQL ints,
-                # and an int×int product overflows (ANSI error) once
-                # span exceeds ~35 min at sub-35-min steps
-                F.expr(
-                    f"(({t_ref} - {off}) div {step}) * {step}"
-                    f" - bigint(_i) * {step}"
-                ).alias("_ets"),
-            )
-            .filter(
-                F.col("_ets")
-                > F.expr(t_ref) - F.lit(off + sub.range_us)
-            )
-            .select("_ets")
+        return self._points_frame(self.grid_points_py(sub))
+
+    def _points_frame(self, pts: "list[int]") -> DataFrame:
+        """The `_ets` relation of driver-known, evenly spaced instants
+        (descending, as `grid_points_py` returns them)."""
+        p0 = pts[0] if pts else 0
+        step = pts[0] - pts[1] if len(pts) > 1 else 0
+        return self._range(len(pts)).select(
+            F.expr(f"CAST({p0} AS BIGINT) - id * {step}").alias("_ets")
         )
 
     def grid_points_py(self, sub: Subquery) -> list[int]:
-        """Driver-side twin of `_grid`: the exact step-aligned instant
-        list as Python ints (t_max is pinned driver state, so the
+        """The exact step-aligned instant list `_grid` builds from,
+        as Python ints (t_max is pinned driver state, so the
         epoch-aligned grid is pure integer arithmetic — consumers that
         only need the grid SIZE or MAX no longer pay a per-rule
         aggregate + broadcast join for it). Descending, like `_grid`'s
@@ -1970,8 +1973,9 @@ class PromQLEvaluator:
             )
         jk = ["_k", "_ets"]
         key = _label_str(self._match_labels(node.match, F.col("labels")))
-        lk = self._gvector(node.lhs).withColumn("_k", key)
-        rk = self._gvector(node.rhs).withColumn("_k", key)
+        cols = ["_ets", "labels", "value", key.alias("_k")]
+        lk = self._gvector(node.lhs).select(*cols)
+        rk = self._gvector(node.rhs).select(*cols)
         if node.op == "and":
             out = lk.join(rk.select(*jk).distinct(), jk, "semi")
         elif node.op == "unless":
@@ -2100,16 +2104,14 @@ class PromQLEvaluator:
                         else (cond & ~isn)
                     )
                 if node.bool_mode:
-                    return vec.withColumn("value", cond.cast("double")).select(
-                        "_ets", "labels", "value"
+                    return vec.select(
+                        "_ets", "labels", cond.cast("double").alias("value")
                     )
-                return vec.filter(cond).select("_ets", "labels", "value")
+                return vec.filter(cond)
             val = (
                 arith(F.col("value"), sc) if rsc else arith(sc, F.col("value"))
             )
-            return vec.withColumn("value", val).select(
-                "_ets", "labels", "value"
-            )
+            return vec.select("_ets", "labels", val.alias("value"))
 
         # vector ⋄ vector: equi-join on the canonical string of the
         # match label set — full set by default, on()'s subset, or the
@@ -2467,10 +2469,7 @@ class PromQLEvaluator:
         `span_us` is the enclosing query range, 0 for an instant query
         (so `@ start()` and `@ end()` both resolve to t_max)."""
         return _Grid(
-            lambda: self._tmax.select(F.lit(t_us).cast("long").alias("_ets")),
-            (t_us, t_us),
-            span_us,
-            t_us,
+            lambda: self._points_frame([t_us]), (t_us, t_us), span_us, t_us
         )
 
     def _points_grid(self, pts: list[int], span_us: int) -> _Grid:
@@ -2478,37 +2477,16 @@ class PromQLEvaluator:
         as `grid_points_py` returns them)."""
         if len(pts) == 1:
             return self._point_grid(pts[0], span_us)
-        if not pts:
-            return _Grid(
-                lambda: self._point_grid(0).frame.filter(F.lit(False)),
-                None,
-                span_us,
-            )
-
-        def build() -> DataFrame:
-            return self._tmax.select(
-                F.explode(F.sequence(F.lit(0), F.lit(len(pts) - 1))).alias(
-                    "_i"
-                )
-            ).select(
-                (
-                    F.lit(pts[0]).cast("long")
-                    - F.col("_i").cast("long") * F.lit(pts[0] - pts[1])
-                ).alias("_ets")
-            )
-
-        return _Grid(build, (pts[-1], pts[0]), span_us)
+        return _Grid(
+            lambda: self._points_frame(pts),
+            (pts[-1], pts[0]) if pts else None,
+            span_us,
+        )
 
     def _epoch_grid(self, span_us: int, step_us: int) -> _Grid:
         """The epoch-aligned grid over (t_max - span, t_max]."""
-        sub = Subquery(None, span_us, step_us)
-        gp = self.grid_points_py(sub)
-        if len(gp) == 1:
-            return self._point_grid(gp[0], span_us)
-        return _Grid(
-            lambda: self._grid(sub),
-            (min(gp), max(gp)) if gp else None,
-            span_us,
+        return self._points_grid(
+            self.grid_points_py(Subquery(None, span_us, step_us)), span_us
         )
 
     def _request_grid(
@@ -2537,34 +2515,36 @@ class PromQLEvaluator:
         finally:
             self._g = saved
 
-    def _evaluate(self, expr: str, grid: _Grid) -> DataFrame:
-        """The one evaluator core: parse `expr` and compile it on
-        `grid` → (_ets, labels MAP, value). A pure-scalar expression
+    def _evaluate(
+        self, expr: str, grid: _Grid, ts: bool, label_str: bool
+    ) -> DataFrame:
+        """The one evaluator core: parse `expr`, compile it on `grid`
+        and render the response columns: `ts_us` on range responses,
+        the label set as its canonical string or as the map, and the
+        value at the 4dp pin the registered string-form relations use.
+        A root aggregation renders inside its own aggregate (`_gagg`),
+        any other root in one select. A pure-scalar expression
         (`resultType: scalar`) is one empty-labeled row per instant."""
         node = parse(expr)
         if is_scalar_expr(node):
             node = VectorExpr(node)
-        return self._on_grid(grid, self._gvector, node)
-
-    @staticmethod
-    def _render(out: DataFrame, ts: bool, label_str: bool) -> DataFrame:
-        """Response columns: `ts_us` on range responses, the label set
-        as its canonical string or as the map, and the value at the
-        4dp pin the registered string-form relations use."""
+        render = _Render(ts, label_str)
+        if isinstance(node, Agg) and node.op in _LABEL_AGGS:
+            return self._on_grid(
+                grid, lambda n: self._gagg(n, render), node
+            )
+        out = self._on_grid(grid, self._gvector, node)
         return out.select(
-            *([F.col("_ets").alias("ts_us")] if ts else []),
-            _label_str("labels").alias("labels") if label_str else "labels",
-            F.round("value", 4).alias("value"),
+            *render.keys("labels"),
+            _sql("round(value, 4)").alias("value"),
         )
 
     def eval(self, expr: str) -> DataFrame:
         """Evaluate a PromQL instant query at t_max → (label_str,
         value). Pure-scalar expressions return ONE empty-labeled row
         (the relational rendering of `resultType: scalar`)."""
-        return self._render(
-            self._evaluate(expr, self._point_grid(self._tmax_us)),
-            ts=False,
-            label_str=True,
+        return self._evaluate(
+            expr, self._point_grid(self._tmax_us), ts=False, label_str=True
         )
 
     def eval_instant_map(self, expr: str) -> DataFrame:
@@ -2572,10 +2552,8 @@ class PromQLEvaluator:
         (sources/query_api.py) renders the map as the response's
         `metric` object; values carry the same 4dp pin so the JSON is
         bit-identical to the registered string-form relations."""
-        return self._render(
-            self._evaluate(expr, self._point_grid(self._tmax_us)),
-            ts=False,
-            label_str=False,
+        return self._evaluate(
+            expr, self._point_grid(self._tmax_us), ts=False, label_str=False
         )
 
     def eval_raw_matrix(self, expr: str) -> DataFrame:
@@ -2617,20 +2595,12 @@ class PromQLEvaluator:
         """Upstream's query_range grid: t = start + k·step for
         k = 0..⌊(end-start)/step⌋ — INCLUSIVE of start, aligned to the
         request's own `start` rather than to the epoch. A ≤(span/step
-        + 1)-row derived relation off the 1-row t_max literal, always
-        broadcast — same plan shape as the epoch-aligned `_grid`."""
-        n = int((end_us - start_us) // step_us)
-        return (
-            self._tmax.select(
-                F.explode(F.sequence(F.lit(0), F.lit(n))).alias("_i")
-            )
-            .select(
-                # long cast: _i and a sub-2³¹ step are both ints, and
-                # an int×int product overflows (ANSI) on fine grids
-                (
-                    F.lit(start_us)
-                    + F.col("_i").cast("long") * F.lit(step_us)
-                ).alias("_ets")
+        + 1)-row derived relation, always broadcast — same plan shape
+        as the epoch-aligned `_grid`."""
+        n = int((end_us - start_us) // step_us) + 1
+        return self._range(n).select(
+            F.expr(f"CAST({start_us} AS BIGINT) + id * {step_us}").alias(
+                "_ets"
             )
         )
 
@@ -2643,10 +2613,9 @@ class PromQLEvaluator:
         alignment, start itself included). The evaluator must be
         pinned at `end_us` so `@ start()`/`@ end()` resolve to the
         request window."""
-        return self._render(
-            self._evaluate(
-                expr, self._request_grid(start_us, end_us, step_us)
-            ),
+        return self._evaluate(
+            expr,
+            self._request_grid(start_us, end_us, step_us),
             ts=True,
             label_str=False,
         )
@@ -2656,10 +2625,8 @@ class PromQLEvaluator:
     ) -> DataFrame:
         """(ts_us, labels MAP, value) twin of `eval_range` for the
         HTTP JSON layer's matrix rendering."""
-        return self._render(
-            self._evaluate(expr, self._epoch_grid(span_us, step_us)),
-            ts=True,
-            label_str=False,
+        return self._evaluate(
+            expr, self._epoch_grid(span_us, step_us), ts=True, label_str=False
         )
 
     def eval_range(
@@ -2676,25 +2643,26 @@ class PromQLEvaluator:
         grid points are never looped, and the per-instant keying
         shards exactly like a (series, time-bucket) rollup at scale.
         """
-        return self._render(
-            self._evaluate(expr, self._epoch_grid(span_us, step_us)),
-            ts=True,
-            label_str=True,
+        return self._evaluate(
+            expr, self._epoch_grid(span_us, step_us), ts=True, label_str=True
         )
 
     def _gend(self, sel) -> Column:
-        """Grid-leaf evaluation time: the grid instant `_ets`, unless
-        `@` pins it — to a literal, or to the grid window edges for
-        `@ start()` / `@ end()`; `offset` shifts any of them back."""
+        """Grid-leaf evaluation time: the grid instant `_ets` (a
+        literal on a one-point grid), unless `@` pins it — to a
+        literal, or to the grid window edges for `@ start()` /
+        `@ end()`; `offset` shifts any of them back."""
         if sel.at_us is None:
-            base = F.col("_ets")
+            if self._g.point is None:
+                return F.col("_ets") - F.lit(sel.offset_us)
+            t = self._g.point
         elif sel.at_us == _AT_END:
-            base = F.col("t_max")
+            t = self._tmax_us
         elif sel.at_us == _AT_START:
-            base = F.col("t_max") - F.lit(self._g.span)
+            t = self._tmax_us - self._g.span
         else:
-            base = F.lit(sel.at_us)
-        return base - F.lit(sel.offset_us)
+            t = sel.at_us
+        return F.lit(t - sel.offset_us)
 
     @staticmethod
     def _lagged(df: DataFrame) -> DataFrame:
@@ -2705,9 +2673,12 @@ class PromQLEvaluator:
         satisfies the downstream (series_id, _ets) aggregate's
         clustering, so the whole leaf costs exactly one exchange of
         n samples — never n×instants (guide §2.3)."""
-        w = Window.partitionBy("series_id").orderBy("ts_us", "event_id")
+        w = "OVER (PARTITION BY series_id ORDER BY ts_us, event_id)"
         return df.withColumns(
-            {"_pv": F.lag("value").over(w), "_pts": F.lag("ts_us").over(w)}
+            {
+                "_pv": _sql(f"lag(value) {w}"),
+                "_pts": _sql(f"lag(ts_us) {w}"),
+            }
         )
 
     def _leaf_ts_bounds(
@@ -2746,65 +2717,64 @@ class PromQLEvaluator:
         (win_end - irange, win_end], or cumulative-from-start when
         `irange` is None (the `_bucket` instant-selector semantics).
         `lag=True` precomputes the per-series predecessor columns on
-        the UNMULTIPLIED scan and attaches the per-instant window
-        start `_wlo`, for the lag-spine hash-aggregate folds.
+        the UNMULTIPLIED scan, for the lag-spine folds (which compare
+        them with each instant's window start).
 
         The scan is pre-filtered to the grid's driver-computable time
         span: rows outside it can join no instant, and a predecessor
-        dropped by the pre-filter is below every `_wlo`, so lag pairs
-        are unchanged. On a one-point grid that span IS the window, so
-        the grid join is dropped: `_ets` is attached as a literal
-        column (no BroadcastNestedLoopJoin per leaf), and every lag
-        pair lies inside the window (no `_wlo`)."""
+        dropped by the pre-filter is below every window start, so lag
+        pairs are unchanged. On a one-point grid that span IS the
+        window, so the leaf is the one filter `_matched` builds: no
+        grid join, no `_ets` column (consumers key on `_gkey()`, the
+        literal instant), and every lag pair lies inside the window."""
         bounds = self._leaf_ts_bounds(sel, irange)
         span = None
         if bounds is not None:
             lo, hi = bounds
-            span = F.col("ts_us") <= F.lit(hi)
+            span = f"ts_us <= {hi}"
             if lo is not None:
-                span = span & (F.col("ts_us") > F.lit(lo))
+                span += f" AND ts_us > {lo}"
         base = self._matched(sel, keep_stale=keep_stale, where=span)
         if lag:
             base = self._lagged(base)
         if self._g.point is not None:
-            return base.withColumn("_ets", F.lit(self._g.point).cast("long"))
+            return base
         win_end = self._gend(sel)
         cond = F.col("ts_us") <= win_end
         if irange is not None:
             cond = cond & (F.col("ts_us") > win_end - F.lit(irange))
-        out = base.join(F.broadcast(self._g.frame), cond)
-        if lag and irange is not None:
-            out = out.withColumn("_wlo", win_end - F.lit(irange))
-        return out
+        return base.join(F.broadcast(self._g.frame), cond)
 
     def _gkey(self) -> "Column | str":
-        """The instant key of a per-series leaf fold. On a one-point
-        grid it is the literal itself: Spark drops a literal grouping
-        key, so the fold keeps the (series_id, ts) order its lag window
-        left, where an `_ets` column key would cost a sort per fold."""
+        """The instant key of a per-series leaf fold, output as `_ets`.
+        On a one-point grid it is the literal itself (the leaf has no
+        `_ets` column): Spark drops a literal grouping key, so the fold
+        keeps the (series_id, ts) order its lag window left, where an
+        `_ets` column key would cost a sort per fold."""
         if self._g.point is None:
             return "_ets"
         return F.lit(self._g.point).cast("long").alias("_ets")
 
     def _gpick(self, sel: Selector) -> DataFrame:
         """The instant-selector pick: per (series, grid instant), the
-        newest sample in the staleness lookback as ONE max-struct hash
-        aggregate `_m` (t, e[, s], v) — event_id is unique, so it is
-        the desc row_number pick without a per-instant sort of the
-        multiplied rows (guide §2.3). With staleness markers present
-        the markers take part in the pick and a series whose pick is
-        one drops out (upstream's StaleNaN lookback cut)."""
-        stale = "stale" in self.samples.columns
-        df = self._gwindow(sel, LOOKBACK_US, keep_stale=stale)
-        fields = [F.col("ts_us").alias("t"), F.col("event_id").alias("e")]
-        if stale:
-            fields.append(F.coalesce(F.col("stale"), F.lit(False)).alias("s"))
-        fields.append(F.col("value").cast("double").alias("v"))
-        picked = df.groupBy("series_id", self._gkey()).agg(
-            F.first("labels").alias("labels"),
-            F.max(F.struct(*fields)).alias("_m"),
+        newest sample in the staleness lookback as ONE max-struct
+        aggregate (t, e[, s], v) — event_id is unique, so it is the
+        desc row_number pick without a per-instant sort of the
+        multiplied rows (guide §2.3) → (series_id, _ets, labels,
+        value, _t). With staleness markers present the markers take
+        part in the pick and a series whose pick is one drops out
+        (upstream's StaleNaN lookback cut)."""
+        df = self._gwindow(sel, LOOKBACK_US, keep_stale=self._stale)
+        s = ", 's', coalesce(stale, false)" if self._stale else ""
+        m = (
+            f"max(named_struct('t', ts_us, 'e', event_id{s}, "
+            "'v', CAST(value AS DOUBLE)))"
         )
-        return picked.filter(~F.col("_m.s")) if stale else picked
+        cols = [_sql(f"{m}.v").alias("value"), _sql(f"{m}.t").alias("_t")]
+        if self._stale:
+            cols.append(_sql(f"{m}.s").alias("_s"))
+        picked = df.groupBy("series_id", self._gkey(), "labels").agg(*cols)
+        return picked.filter(~F.col("_s")) if self._stale else picked
 
     @staticmethod
     def _is_series_leaf(node) -> bool:
@@ -2825,25 +2795,32 @@ class PromQLEvaluator:
     def _gseries(self, node) -> DataFrame:
         """A series leaf (`_is_series_leaf`) on the active grid →
         (series_id, _ets, labels, value), hash-clustered on series_id
-        wherever a lag window or fold shuffled it."""
+        wherever a lag window or fold shuffled it. The simple
+        `*_over_time` folds key on the label set alone — a leaf holds
+        one metric, so it identifies the series — and return no
+        series_id."""
         if isinstance(node, Selector):
-            return self._gpick(node).select(
-                "series_id", "_ets", "labels", F.col("_m.v").alias("value")
-            )
+            return self._gpick(node)
         sel, fn = node.sel, node.fn
-        df = self._gwindow(sel, sel.range_us, lag=fn in _LAG_SPINE_FNS)
+        lagged = fn in _LAG_SPINE_FNS
+        df = self._gwindow(sel, sel.range_us, lag=lagged)
+        keys = [self._gkey()]
+        if fn not in _SIMPLE_FOLDS:
+            keys.insert(0, "series_id")
+        wlo = xref = None
+        if lagged and self._g.point is None:
+            wlo = self._gend(sel) - F.lit(sel.range_us)
         if fn in {"deriv", "predict_linear"}:
             # regression x-axis: seconds relative to the UNSHIFTED
             # per-instant evaluation time (Prometheus regresses
             # against the query timestamp, not the offset-shifted
             # window end); centering near 0 keeps the least-squares
             # moments well-conditioned (ts_us ~1.7e15)
-            df = df.withColumn(
-                "_xref", self._gend(sel) + F.lit(sel.offset_us)
-            )
+            xref = self._gend(sel) + F.lit(sel.offset_us)
         return self._range_fold(
-            df, ["series_id", self._gkey()], fn, sel.range_us,
+            df, keys, fn, sel.range_us,
             param=node.param, param2=node.param2,
+            xref=xref, lagged=lagged, wlo=wlo,
         )
 
     def _gbuckets(self, node) -> DataFrame:
@@ -2852,20 +2829,20 @@ class PromQLEvaluator:
         increase over the window = the in-window count of
         observations ≤ le (each observation is one increment)."""
         if isinstance(node, Selector):
-            sel, irange, value = node, None, F.col("cum")
+            sel, irange, per_s = node, None, None
         else:
-            sel, irange, value = node.sel, node.sel.range_us, F.col("cum")
-            if node.fn == "rate":
-                value = value / F.lit(irange / 1e6)
+            sel, irange = node.sel, node.sel.range_us
+            per_s = irange / 1e6 if node.fn == "rate" else None
         df = self._gwindow(self._bucket_base(sel), irange)
-        return self._le_filter(self._bucket_cum(df), sel).select(
-            "_ets", "labels", value.alias("value")
-        )
+        return self._le_filter(self._bucket_cum(df, per_s), sel)
 
     def _gvector(self, node) -> DataFrame:
         """Recursive evaluation on the active grid → (_ets, labels,
         value), every relation carrying the grid instant through
-        folds, aggs, and joins."""
+        folds, aggs, and joins. A node's relation may carry helper
+        columns beside those three (series_id, a fold's flags):
+        consumers name the columns they read, so no node projects
+        them away."""
         if isinstance(node, Selector) and node.range_us is not None:
             raise PromQLSyntaxError("range selector outside a range function")
         if isinstance(node, Subquery):
@@ -2875,11 +2852,13 @@ class PromQLEvaluator:
         if isinstance(node, RangeFn) and isinstance(node.sel, Subquery):
             return self._gsubquery(node)
         if self._is_series_leaf(node):
-            return self._gseries(node).select("_ets", "labels", "value")
+            return self._gseries(node)
         if isinstance(node, (Selector, RangeFn)):
             return self._gbuckets(node)
         if isinstance(node, Agg):
-            return self._gagg(node)
+            if node.op in _LABEL_AGGS:
+                return self._gagg(node)
+            return self._gsubset(node)
         if isinstance(node, HistQuantile):
             return self._hq_impl(self._gvector(node.expr), node.phi)
         if isinstance(node, HistFraction):
@@ -2924,24 +2903,20 @@ class PromQLEvaluator:
             # timestamp(v): the selected sample's ts in seconds
             if node.sel.range_us is not None:
                 raise PromQLSyntaxError("timestamp() needs an instant vector")
-            if "stale" in self.samples.columns:
-                picked, t = self._gpick(node.sel), F.col("_m.t")
+            if self._stale:
+                picked = self._gpick(node.sel)
             else:
                 # only the pick's time is needed: max(ts_us) IS the
                 # pick, as a plain hash aggregate (no struct buffer)
                 picked = (
                     self._gwindow(node.sel, LOOKBACK_US)
-                    .groupBy("series_id", self._gkey())
-                    .agg(
-                        F.first("labels").alias("labels"),
-                        F.max("ts_us").alias("_t"),
-                    )
+                    .groupBy("series_id", self._gkey(), "labels")
+                    .agg(F.max("ts_us").alias("_t"))
                 )
-                t = F.col("_t")
             return picked.select(
                 "_ets",
                 "labels",
-                (t.cast("double") / F.lit(1e6)).alias("value"),
+                (F.col("_t").cast("double") / F.lit(1e6)).alias("value"),
             )
         if isinstance(node, TsFnExpr):
             # per grid instant: the instant itself, in seconds
@@ -2962,9 +2937,10 @@ class PromQLEvaluator:
         'service down over time' liveness panel. The distinct present
         instants are grid-sized, never corpus-sized, so the anti-join
         side always broadcasts; at one point the grid frame is one
-        literal row."""
+        literal row. `present` is any relation with the `_gkey()`
+        instant."""
         return self._g.frame.join(
-            F.broadcast(present.select("_ets").distinct()),
+            F.broadcast(present.select(self._gkey()).distinct()),
             "_ets",
             "left_anti",
         ).select("_ets", labels.alias("labels"), F.lit(1.0).alias("value"))
@@ -2981,11 +2957,11 @@ class PromQLEvaluator:
         (outer × inner) mapping is a ≤(span/step+1)·(r/s+1)-row
         broadcast relation; at one outer point every inner instant
         maps to it, so the inner grid is the driver-known point list
-        and no mapping join is needed. A series-leaf inner folds on
-        its series_id, the clustering its own folds left, so the outer
-        fold adds no exchange; a composed inner folds on the canonical
-        label string. Inner points are pinned at 6dp so discrete outer
-        folds (max/min) can't flip on cross-engine noise."""
+        and no mapping join is needed. The outer fold keys on the
+        inner label entries — plus series_id where a series-leaf inner
+        keeps it, the clustering its own folds left, so the outer fold
+        adds no exchange. Inner points are pinned at 6dp so discrete outer
+        folds (max/min) can't flip on cross-engine noise. Keyed."""
         sub: Subquery = node.sel
         g = self._g
         n = int(sub.range_us // sub.step_us) + 1
@@ -3003,16 +2979,19 @@ class PromQLEvaluator:
                 _AT_START: self._tmax_us - g.span,
             }.get(sub.at_us, sub.at_us)
             ref, refb = str(t), (t, t)
-        leaf = self._is_series_leaf(sub.expr)
-        build = self._gseries if leaf else self._gvector
+        value = F.round("value", 6)
         if g.point is not None:
             inner = self._on_grid(
                 self._points_grid(_step_points(refb[0], sub), g.span),
-                build,
+                self._gvector,
                 sub.expr,
             )
             pts = inner.withColumns(
-                {"_iets": F.col("_ets"), "_ets": F.lit(g.point).cast("long")}
+                {
+                    "_iets": F.col("_ets"),
+                    "_ets": F.lit(g.point).cast("long"),
+                    "value": value,
+                }
             )
         else:
             cg = (
@@ -3046,68 +3025,111 @@ class PromQLEvaluator:
                 else None,
                 g.span,
             )
+            inner = self._on_grid(inner_grid, self._gvector, sub.expr)
             pts = (
-                self._on_grid(inner_grid, build, sub.expr)
-                .withColumnRenamed("_ets", "_iets")
+                inner.withColumnRenamed("_ets", "_iets")
                 .join(F.broadcast(cg), "_iets")
+                .withColumn("value", value)
             )
-        pts = pts.withColumns(
-            {
-                "value": F.round("value", 6),
-                "_k": F.col("series_id") if leaf else _label_str("labels"),
-            }
-        )
+        keys = ["_ets"]
+        if self._is_series_leaf(sub.expr) and not (
+            isinstance(sub.expr, RangeFn) and sub.expr.fn in _SIMPLE_FOLDS
+        ):
+            keys.append("series_id")
         if node.fn in _SUBQ_LAG_FNS or node.fn in _SUBQ_FOLD_FNS or node.fn in _TS_OF_FNS:
             # rate(m[1h:5m]) and friends: the subquery points ARE the
             # range samples — reuse the range folds with the inner
             # instant axis as the timestamp (one point per instant,
-            # so the event_id tiebreak is vacuous)
+            # so the event_id tiebreak is vacuous); the regression
+            # x-ref is the OUTER evaluation instant (per grid point)
             d = pts.select(
-                "_ets",
-                "_k",
+                *keys,
                 "labels",
                 F.col("_iets").alias("ts_us"),
                 F.lit(0).cast("long").alias("event_id"),
                 "value",
             )
-            if node.fn in {"deriv", "predict_linear"}:
-                # x-ref: the OUTER evaluation instant (per grid point)
-                d = d.withColumn("_xref", F.col("_ets"))
             return self._range_fold(
-                d, ["_ets", "_k"], node.fn, sub.range_us,
-                param=node.param, param2=node.param2,
-            ).select("_ets", "labels", "value")
-        if node.fn == "last_over_time":
-            mx = F.max(
-                F.struct(
-                    F.col("_iets").alias("t"), F.col("value").alias("v")
-                )
+                d, keys, node.fn, sub.range_us,
+                param=node.param, param2=node.param2, xref=F.col("_ets"),
             )
-            return (
-                pts.groupBy("_ets", "_k")
-                .agg(F.first("labels").alias("labels"), mx.alias("_m"))
-                .select("_ets", "labels", F.col("_m.v").alias("value"))
+        g = pts.groupBy(*keys, "labels")
+        if node.fn == "last_over_time":
+            return g.agg(
+                _sql("max(named_struct('t', _iets, 'v', value)).v").alias(
+                    "value"
+                )
             )
         outer = _subq_outer(node.fn, node.param)
         if outer is None:
             raise PromQLSyntaxError(
                 f"{node.fn} over a subquery is unsupported"
             )
-        return (
-            pts.groupBy("_ets", "_k")
-            .agg(
-                F.first("labels").alias("labels"),
-                outer.alias("value"),
+        return g.agg(outer.alias("value"))
+
+    def _gagg(self, node: Agg, render: "_Render | None" = None) -> DataFrame:
+        """by()/without() aggregation per grid instant — one hash
+        aggregate keyed on (_ets, the grouped label map). A `render`
+        (the query's root) makes it the response relation itself: the
+        response columns are its keys and the pinned fold. Every
+        output row is one group of some input row, so an empty input
+        answers an empty vector (a literal group key stays in place:
+        Spark keeps one for exactly that). Over a simple fold of a
+        selector whose result is the fold of the group's pooled
+        window samples (`_POOLED_FOLDS`), the fold and the
+        aggregation are that one aggregate over the leaf."""
+        inner = node.expr
+        pooled = (
+            _POOLED_FOLDS.get((node.op, inner.fn))
+            if isinstance(inner, RangeFn) and self._is_series_leaf(inner)
+            else None
+        )
+        ets = F.col("_ets")
+        if pooled is None:
+            src = self._gvector(inner)
+        else:
+            src = self._gwindow(inner.sel, inner.sel.range_us)
+            if self._g.point is not None:
+                ets = F.lit(self._g.point).cast("long")
+        labels = _agg_labels(node.mode, node.by)
+        if node.op == "count_values":
+            # the 6dp-pinned value RENDERED AS A LABEL joins the
+            # grouping key (replacing a kept label of that name);
+            # count of contributing series is the value
+            vl = sql_str(node.value_label)
+            labels = (
+                f"map_concat(map_filter({labels}, (k, v) -> k != {vl}), "
+                f"map({vl}, CAST(round(value, 6) AS STRING)))"
             )
-            .select("_ets", "labels", "value")
+        # built on demand: each Column is a Py4J round trip
+        fold = _sql(pooled) if pooled is not None else {
+            **_WINDOWABLE_AGGS,
+            "count_values": _WINDOWABLE_AGGS["count"],
+            # Prometheus quantile agg = φ·(n-1) rank linear
+            # interpolation — exactly percentile()/quantile_cont().
+            # Inputs pinned at 6dp: the order statistic SELECTION is
+            # discrete, so accumulation noise must not reorder values.
+            "quantile": lambda: F.percentile(
+                F.round(F.col("value"), 6), F.lit(node.param or 0.0)
+            ),
+            # population moments (the PromQL definition), over the
+            # 6dp-pinned inputs so both engines fold identical values
+            "stddev": lambda: F.stddev_pop(F.round(F.col("value"), 6)),
+            "stdvar": lambda: F.var_pop(F.round(F.col("value"), 6)),
+        }[node.op]()
+        if render is None:
+            return src.groupBy(
+                ets.alias("_ets"), _sql(labels).alias("labels")
+            ).agg(fold.alias("value"))
+        return src.groupBy(*render.keys(_sql(labels), ets)).agg(
+            F.round(fold, 4).alias("value")
         )
 
-    def _gagg(self, node: Agg) -> DataFrame:
-        """by()/without() aggregation per grid instant — one hash
-        aggregate keyed on (_ets, grouped label set); topk/bottomk
-        rank inside (_ets, group) window partitions (the "top 5
-        series" Grafana panel) — partitions are group-sized, never
-        grid- or corpus-sized."""
+    def _gsubset(self, node: Agg) -> DataFrame:
+        """The series-subset aggregations: sort*, limit_ratio, and
+        topk/bottomk/limitk, which rank inside (_ets, group) window
+        partitions (the "top 5 series" Grafana panel) — partitions are
+        group-sized, never grid- or corpus-sized."""
         pts = self._gvector(node.expr)
         one = self._g.point is not None
         if node.op in _SORT_FNS or node.op in _SORT_BY_LABEL_FNS:
@@ -3181,55 +3203,6 @@ class PromQLEvaluator:
                 .filter(F.col("_rk") <= node.k)
                 .drop("_rk")
             )
-        if node.mode == "without":
-            new_labels = (
-                F.map_filter(
-                    F.col("labels"), lambda k, _v: ~k.isin(*node.by)
-                )
-                if node.by
-                else F.col("labels")
-            )
-        else:
-            new_labels = (
-                F.map_from_arrays(
-                    F.array(*[F.lit(b) for b in node.by]),
-                    F.array(
-                        *[F.element_at("labels", F.lit(b)) for b in node.by]
-                    ),
-                )
-                if node.by
-                else F.map_from_arrays(F.array(), F.array())
-            )
-        if node.op == "count_values":
-            # the 6dp-pinned value RENDERED AS A LABEL joins the
-            # grouping key; count of contributing series is the value
-            rendered = F.round(F.col("value"), 6).cast("string")
-            new_labels = F.map_concat(
-                new_labels,
-                F.create_map(F.lit(node.value_label), rendered),
-            )
-        # built on demand: each Column is a Py4J round trip
-        fold = {
-            **_WINDOWABLE_AGGS,
-            "count_values": _WINDOWABLE_AGGS["count"],
-            # Prometheus quantile agg = φ·(n-1) rank linear
-            # interpolation — exactly percentile()/quantile_cont().
-            # Inputs pinned at 6dp: the order statistic SELECTION is
-            # discrete, so accumulation noise must not reorder values.
-            "quantile": lambda: F.percentile(
-                F.round(F.col("value"), 6), F.lit(node.param or 0.0)
-            ),
-            # population moments (the PromQL definition), over the
-            # 6dp-pinned inputs so both engines fold identical values
-            "stddev": lambda: F.stddev_pop(F.round(F.col("value"), 6)),
-            "stdvar": lambda: F.var_pop(F.round(F.col("value"), 6)),
-        }[node.op]()
-        return (
-            pts.withColumn("labels", new_labels)
-            .groupBy("_ets", _label_str("labels").alias("_k"))
-            .agg(F.first("labels").alias("labels"), fold.alias("value"))
-            .drop("_k")
-        )
 
 
 def promql_eval(spark: SparkSession, sf_dir: str, expr: str) -> DataFrame:

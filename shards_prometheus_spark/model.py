@@ -169,9 +169,10 @@ def series_id_expr(metric, labels) -> F.Column:
     + xxhash64): codegen, no shuffle."""
     from shards_prometheus_spark.functions.labelset import label_str
 
-    metric_col = F.col(metric) if isinstance(metric, str) else metric
-    labels_col = F.col(labels) if isinstance(labels, str) else labels
-    return F.xxhash64(metric_col, label_str(labels_col))
+    # a `labels` NAME reaches label_str as-is: its rendering Column is
+    # cached per name, where a fresh F.col would rebuild the
+    # higher-order transform on every call
+    return F.xxhash64(metric, label_str(labels))
 
 
 def _ts_us(df: DataFrame, col: str = "ts") -> F.Column:

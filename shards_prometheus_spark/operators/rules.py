@@ -60,6 +60,7 @@ from shards_prometheus_spark.functions.promql_parser import (
     ScalarFn,
     Selector,
     Subquery,
+    _agg_labels,
     _grid_cte,
     _grid_increase_cte,
     _increase_cte,
@@ -260,29 +261,22 @@ def _eval_threshold_batch(
             & (F.col("ts_us") > F.lit(min(gp) - range_us))
         )
     base = ev._lagged(base)
-    win_end = F.col("_ets")
+    wlo = F.col("_ets") - F.lit(range_us)
     df = base.join(
         F.broadcast(ev._grid(sub)),
-        (F.col("ts_us") <= win_end)
-        & (F.col("ts_us") > win_end - F.lit(range_us)),
-    ).withColumn("_wlo", win_end - F.lit(range_us))
+        (F.col("ts_us") <= F.col("_ets")) & (F.col("ts_us") > wlo),
+    )
     # per-(metric, series, instant) rate/increase — metric joins the
     # keys only to survive the fold (it is functionally dependent on
     # series_id, so the groups are unchanged)
     pts = ev._range_fold(
-        df, ["metric", "series_id", "_ets"], fn, range_us
+        df, ["metric", "series_id", "_ets"], fn, range_us,
+        lagged=True, wlo=wlo,
     )
     # sum by (K) per metric — the _gagg by-mode fold
-    new_labels = F.map_from_arrays(
-        F.array(*[F.lit(b) for b in by]),
-        F.array(*[F.element_at("labels", F.lit(b)) for b in by]),
-    )
-    agg = (
-        pts.withColumn("labels", new_labels)
-        .groupBy("metric", "_ets", label_str("labels").alias("_k"))
-        .agg(F.first("labels").alias("labels"), F.sum("value").alias("value"))
-        .drop("_k")
-    )
+    agg = pts.groupBy(
+        "metric", "_ets", F.expr(_agg_labels("by", list(by))).alias("labels")
+    ).agg(F.sum("value").alias("value"))
     # `v ⋄ scalar(avg(v))`: the threshold as a window over the same
     # rows, per (metric, instant) — the _binop windowable-agg path
     w = Window.partitionBy("metric", "_ets")
@@ -804,6 +798,10 @@ def rule_file_firing(
     rules."""
     out = _eval_groups(samples, _alert_groups(text), eval_ts_us=eval_ts_us)
     return None if out is None else out.filter(F.col("kind") == "alert")
+
+
+#: the series `rule_file_alert_state_samples` derives
+ALERT_STATE_METRICS = frozenset({"ALERTS", "ALERTS_FOR_STATE"})
 
 
 def rule_file_alert_state_samples(

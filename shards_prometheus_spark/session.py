@@ -29,10 +29,12 @@ _RUNTIME_CONFS = {
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Start shuffles wide and let AQE coalesce down: a fixed
     # spark.sql.shuffle.partitions caps parallelism as data grows
-    # (the sf1.0 rehearsal hit 60 M+ rows/partition at 32), while a
-    # high initial count costs nothing once AQE merges small outputs.
-    # On a 1000-executor cluster this is the difference between a knob
-    # retuned per dataset and a plan that right-sizes itself.
+    # (the sf1.0 rehearsal hit 60 M+ rows/partition at 32). A high
+    # initial count is NOT free on small reads: every map task still
+    # writes 256 shuffle blocks before AQE merges them, and a PromQL
+    # read of a few tens of thousands of samples collected in
+    # 374-417 ms at 256 against 254-301 ms at 4 (4-vCPU host,
+    # local[4]). A count sized from the data would serve both ends.
     "spark.sql.adaptive.coalescePartitions.initialPartitionNum": "256",
     # Arrow for any pandas-interop path (multimodal UDFs).
     "spark.sql.execution.arrow.pyspark.enabled": "true",

@@ -1850,13 +1850,18 @@ class MetricsExposer:
         remote-read endpoint, and TSDB snapshots."""
         return self._read(need_time=False)[0]
 
-    def _read(self, need_time: bool) -> "tuple[DataFrame, int | None]":
+    def _read(
+        self, need_time: bool, alerts: bool = True
+    ) -> "tuple[DataFrame, int | None]":
         """(`read_samples()`'s relation, the stored data's time) — the
         time is the newest stored sample before the ALERTS union,
-        computed when `need_time` is set or a rule file needs it (else
-        None): the batch dir's memo when the relation is the bare dir
-        (no pushed rows, no tombstones), one collect otherwise (the
-        store changes between requests)."""
+        computed when `need_time` is set or the ALERTS leg needs it
+        (else None): the batch dir's memo when the relation is the
+        bare dir (no pushed rows, no tombstones), one collect otherwise
+        (the store changes between requests). `alerts=False` leaves a
+        rule file's ALERTS leg out, for a query that cannot select it:
+        the leg builds one plan per alert-group rule in Python even
+        where Spark prunes it."""
         from shards_prometheus_spark.functions.labelset import (
             matcher_condition,
         )
@@ -1883,14 +1888,15 @@ class MetricsExposer:
             if e_us is not None:
                 cond = cond & (F.col("ts_us") <= F.lit(int(e_us)))
             base = base.filter(~cond)
+        alerts = alerts and self._rule_file is not None
         t_data = None
-        if need_time or self._rule_file is not None:
+        if need_time or alerts:
             t_data = (
                 dir_time_us(self._spark, self._sf_dir)
                 if bare_dir
                 else data_time_us(base)
             )
-        if self._rule_file is not None:
+        if alerts:
             # the ALERTS / ALERTS_FOR_STATE synthetic series upstream
             # records on every rule evaluation — derived here on read
             # from the rule file over the pre-union base (never from
@@ -2103,12 +2109,16 @@ class MetricsExposer:
         — state-mutating admin endpoints accept POST/PUT only."""
         from shards_prometheus_spark.functions.promql_parser import (
             PromQLEvaluator,
+            selects_metric,
+        )
+        from shards_prometheus_spark.operators.rules import (
+            ALERT_STATE_METRICS,
         )
         from shards_prometheus_spark.sources.query_api import (
             handle_api_request,
         )
 
-        def make_evaluator(eval_ts_us):
+        def make_evaluator(eval_ts_us, query=None):
             # a FRESH evaluator per request over the current read
             # relation (pushed state, tombstones and a rule file's
             # ALERTS series all change between requests); a shared
@@ -2116,8 +2126,14 @@ class MetricsExposer:
             # construction sets the evaluator's active grid. The
             # default time is the stored data's — the batch dir's
             # memo for a bare dir (clear_caches() releases it after a
-            # dir is rewritten in place), one collect otherwise
-            samples, t_data = self._read(need_time=eval_ts_us is None)
+            # dir is rewritten in place), one collect otherwise. A
+            # PromQL `query` that reads no alert-state metric gets no
+            # ALERTS leg
+            samples, t_data = self._read(
+                need_time=eval_ts_us is None,
+                alerts=query is None
+                or selects_metric(query, ALERT_STATE_METRICS),
+            )
             return PromQLEvaluator(
                 samples,
                 eval_ts_us=t_data if eval_ts_us is None else eval_ts_us,

@@ -503,7 +503,7 @@ def _rule_file_firing(evaluator, rule_file: str) -> dict:
     from shards_prometheus_spark.operators import rules as R
 
     df = R.rule_file_firing(
-        evaluator.samples.drop("t_max"),
+        evaluator.samples,
         rule_file,
         eval_ts_us=evaluator.eval_time_us(),
     )
@@ -932,8 +932,9 @@ def handle_api_request(
 ) -> tuple:
     """Dispatch one read-API request → (http_status, payload dict).
 
-    `make_evaluator(eval_ts_us | None)` builds a PromQLEvaluator
-    pinned at the given time (None = data t_max) — collect-on-query,
+    `make_evaluator(eval_ts_us | None, query=None)` builds a
+    PromQLEvaluator pinned at the given time (None = data t_max),
+    for the PromQL `query` when there is one — collect-on-query,
     the read twin of the exposer's collect-on-scrape. `params` is the
     parse_qs dict (each value a list). `rule_file` (a user's YAML
     rules text) is what /api/v1/rules and /api/v1/alerts serve; with
@@ -1078,7 +1079,7 @@ def handle_api_request(
             t = p("time")
             time_us = parse_time_param(t) if t is not None else None
             t0 = time.perf_counter()
-            ev = make_evaluator(time_us)
+            ev = make_evaluator(time_us, query=query)
             if time_us is None:
                 time_us = ev.eval_time_us()
             resp = _apply_series_limit(
@@ -1111,7 +1112,7 @@ def handle_api_request(
             t0 = time.perf_counter()
             resp = _apply_series_limit(
                 range_data(
-                    make_evaluator(end_us),
+                    make_evaluator(end_us, query=query),
                     query,
                     start_us,
                     end_us,

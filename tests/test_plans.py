@@ -746,3 +746,31 @@ def test_instant_subquery_exchange_count(spark):
             ev.eval_instant_map("max_over_time(rate(click[1h])[6h:30m])")
         )
         assert _exchange_nodes(plan) <= 2
+
+
+def test_label_set_folds_plan_as_hash_aggregates(spark):
+    """The simple `*_over_time` fold and the by() aggregation group on
+    the label map itself (Spark sorts a map group key), so no map sits
+    in an aggregate buffer and neither node plans as a
+    SortAggregate — instant or range, as one aggregate over the
+    pooled samples (sum of sums) or as two (avg of sums)."""
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+        data_time_us,
+    )
+    from shards_prometheus_spark.model import samples_multi
+    from shards_prometheus_spark.plans import formatted_plan
+
+    samples = samples_multi(spark, SF_SMOKE)
+    t = data_time_us(samples)
+    ev = PromQLEvaluator(samples, t)
+    h = 3_600_000_000
+    for op in ("sum", "avg"):
+        expr = f"{op} by (shard) (sum_over_time(click[1d]))"
+        for df in (
+            ev.eval_instant_map(expr),
+            ev.eval_range_map_at(expr, t - 24 * h, t, 6 * h),
+        ):
+            plan = formatted_plan(df)
+            assert "SortAggregate" not in plan
+            assert "HashAggregate" in plan

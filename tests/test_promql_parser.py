@@ -2403,3 +2403,75 @@ def test_instant_equals_grid_slice(equiv_ev, expr):
         if r["ts_us"] == t
     )
     assert inst == grid
+
+
+def _dataframes(spark, fn) -> int:
+    """How many DataFrames `fn()` constructs (each one is a JVM
+    analysis; PySpark's DataFrame runs `__init__` twice per object, so
+    this counts `__init__` calls)."""
+    cls = type(spark.range(1))
+    owner = next(c for c in cls.__mro__ if "__init__" in c.__dict__)
+    orig = owner.__init__
+    calls = []
+
+    def counted(self, *args, **kwargs):
+        calls.append(1)
+        orig(self, *args, **kwargs)
+
+    owner.__init__ = counted
+    try:
+        fn()
+    finally:
+        owner.__init__ = orig
+    return len(calls)
+
+
+def test_plan_dataframe_budget(spark):
+    """Evaluator construction builds no DataFrame, and the two read
+    shapes of the ingest_with_reads benchmark (a global count and a
+    by() sum over a simple fold) plan in at most 6 `__init__` calls
+    (3 DataFrames; a projection per node took 16 calls)."""
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+    )
+
+    samples = samples_multi(spark, SF_SMOKE)
+    samples.columns  # analysed before counting
+    box = {}
+    n = _dataframes(
+        spark, lambda: box.setdefault("ev", PromQLEvaluator(samples, 1))
+    )
+    assert n == 0, n
+    ev = box["ev"]
+    for q in (
+        "sum(count_over_time(click[30d]))",
+        "sum by (shard) (sum_over_time(view[1d]))",
+    ):
+        ev.eval_instant_map(q)  # the schema probe runs once
+        assert _dataframes(spark, lambda: ev.eval_instant_map(q)) <= 6, q
+
+
+@pytest.mark.parametrize(
+    "expr",
+    [
+        "sum(count_over_time(nonexistent_metric[30d]))",
+        "sum by (shard) (sum_over_time(nonexistent_metric[1d]))",
+        "count(nonexistent_metric)",
+        "sum without (user) (rate(nonexistent_metric[1h]))",
+    ],
+)
+def test_aggregation_of_nothing_is_empty(spark, expr):
+    """An aggregation over no matching series answers an empty
+    vector, not one null row, on every entry point."""
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+        data_time_us,
+    )
+
+    samples = samples_multi(spark, SF_SMOKE)
+    t = data_time_us(samples)
+    ev = PromQLEvaluator(samples, t)
+    assert ev.eval(expr).collect() == []
+    assert ev.eval_instant_map(expr).collect() == []
+    day = 86_400_000_000
+    assert ev.eval_range_map_at(expr, t - day, t, day // 4).collect() == []

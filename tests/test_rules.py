@@ -279,6 +279,49 @@ def test_alert_paths_build_each_alert_rule_once(spark):
     assert n == sum(len(g["rules"]) for g in alerting) == 9, n
 
 
+def test_alerts_leg_only_for_queries_that_select_it(spark):
+    """On a rule-file exposer a query that reads no ALERTS /
+    ALERTS_FOR_STATE series builds no rule plan (the leg used to
+    compile every alert-group rule on every read), and
+    `ALERTS{alertstate="firing"}` still answers the firing ALERTS
+    series recorded in rule_states_sf0.001.json, at the data's time."""
+    import json
+    import os
+
+    from shards_prometheus_spark.functions.promql_parser import (
+        data_time_us,
+    )
+    from shards_prometheus_spark.operators.rules import DEMO_RULE_FILE
+    from shards_prometheus_spark.sources import MetricsExposer
+
+    ex = MetricsExposer(spark, SF_SMOKE, rule_file=DEMO_RULE_FILE)
+    q = {"query": ["sum(count_over_time(click[30d]))"]}
+    n = _compiles(lambda: ex.handle_api("/api/v1/query", q))
+    assert n == 1, n  # the query itself
+    h = {"query": q["query"], "start": ["1706400000"],
+         "end": ["1706600000"], "step": ["50000"]}
+    n = _compiles(lambda: ex.handle_api("/api/v1/query_range", h))
+    assert n == 1, n
+    status, body = ex.handle_api(
+        "/api/v1/query", {"query": ['ALERTS{alertstate="firing"}']}
+    )
+    assert status == 200
+    with open(
+        os.path.join(os.path.dirname(__file__), "rule_states_sf0.001.json")
+    ) as f:
+        rows = json.load(f)["DEMO_RULE_FILE"]["alerts_rows"]
+    want = sorted(
+        [list(kv) for kv in lbl] for m, lbl, _v in rows
+        if m == "ALERTS" and dict(lbl)["alertstate"] == "firing"
+    )
+    got = body["data"]["result"]
+    assert sorted(
+        [list(kv) for kv in sorted(r["metric"].items())] for r in got
+    ) == want
+    t = data_time_us(samples_multi(spark, SF_SMOKE)) / 1e6
+    assert {tuple(r["value"]) for r in got} == {(t, "1")}
+
+
 @pytest.mark.parametrize("name", ["DEMO_RULE_FILE", "BUILTIN_RULE_FILE"])
 def test_rule_file_states_equal_recorded(spark, name):
     """The firing set and the ALERTS / ALERTS_FOR_STATE rows of the
