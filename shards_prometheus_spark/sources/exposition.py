@@ -2313,6 +2313,7 @@ class MetricsExposer:
             self._rule_loop_stop = None
         self._server.shutdown()
         self._server.server_close()
+        self._rw.stop()  # removes the pushed store's block files
 
 
 _SNAP_SQL = (

@@ -22,19 +22,24 @@ Three layers, each independently testable:
 - **HTTP receiver** (`RemoteWriteReceiver`): the POST
   `/api/v1/write` endpoint — decompress + parse per request
   (payloads are scrape-sized), rows appended to a driver-side store
-  the read API serves via `samples_fn` (each read converts only the
-  rows pushed since the last one into an Arrow segment; see the
-  class docstring). 2xx on success (204 per the 1.0 spec), 400 on a
+  the read API serves via `samples_fn` (each read writes only the
+  rows pushed since the last one as an immutable parquet block and
+  scans the live blocks as one file source; see the class
+  docstring). 2xx on success (204 per the 1.0 spec), 400 on a
   corrupt payload — the public receiver contract.
 """
 
 from __future__ import annotations
 
-import functools
+import os
+import shutil
+import tempfile
 import threading
+import weakref
 from typing import Iterator
 
 import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -56,6 +61,13 @@ from shards_prometheus_spark.functions.miniformats import (
 DECODED_SCHEMA = (
     "metric string, labels map<string,string>, label_user string, "
     "ts_us long, value double"
+)
+
+#: the stored columns of a pushed block, in file order (samples()
+#: adds series_id on read)
+BLOCK_SCHEMA = (
+    "event_id long, metric string, labels map<string,string>, "
+    "label_user string, ts_us long, value double"
 )
 
 #: Largest POST body either /api/v1/write handler will buffer —
@@ -865,35 +877,53 @@ class RemoteWriteReceiver:
     samples relation, pluggable into MetricsExposer's `samples_fn`
     so the full read API serves pushed data.
 
-    Store layout — an append-only table read incrementally:
+    Store layout — an append-only table of immutable parquet blocks,
+    the paired server's head plus on-disk blocks:
 
     - **tuple tail**: `receive` / `ingest_rows` only append the parsed
       (labels, ts_ms, value) tuples under `_lock`. Ingest does no
       conversion, so a push costs its decode and a list extend,
       never a share of the store's size.
-    - **Arrow segments**: each `samples` call converts just the tail
-      pushed since the previous call into one Arrow table, ships it
-      to Spark once (`createDataFrame(table)`, series_id added), keeps
-      the immutable (table, DataFrame) pair as a new segment, drops
-      the converted tuples, and returns the union of all segments.
-    - **merge rule**: while the newest segment has at least half the
-      rows of the one before it, the two tables are concatenated
-      into one segment (log-structured, no size setting). Segment
-      sizes therefore at least halve from oldest to newest, so a
-      read's plan holds O(log n) leaves and each row is re-shipped
-      O(log n) times over the store's life.
+    - **blocks**: each `samples` call converts just the tail pushed
+      since the previous call into one Arrow table, writes it as one
+      parquet file in the receiver's block directory (made on the
+      first render under the process temp dir), keeps the (table,
+      file) pair as a new block, drops the converted tuples, and
+      returns ONE file scan over the live blocks — so a read's
+      `metric` and `ts_us` predicates reach the parquet reader.
+    - **merge rule**: while the newest block has at least half the
+      rows of the one before it, the two Arrow tables (kept in
+      memory; no block is read back from disk) are concatenated and
+      written as one new block (log-structured, no size setting).
+      Block sizes therefore at least halve from oldest to newest, so
+      a read lists O(log n) files and each row is rewritten at most
+      log2 n times.
+    - **snapshot rule**: a returned DataFrame is a snapshot that later
+      pushes do not change, and it stays readable after later merges:
+      a merged-away block's file stays on disk while the receiver
+      lives (O(n log n) bytes over the store's life). `stop()` — or
+      the receiver's finalizer, for one that is dropped unstopped —
+      removes the directory; a read after `stop()` writes the live
+      blocks again.
 
-    `_render_lock` serialises renders; a returned DataFrame is a
-    snapshot that later pushes do not change."""
+    `_render_lock` serialises renders. On a cluster the block
+    directory must be readable by the executors, as the base store
+    already must be."""
 
     def __init__(self, host: str = "127.0.0.1", port: int = 0):
         self.host, self.port = host, port
         #: tuples pushed since the last render (the unconverted tail)
         self._rows: list[tuple[dict, int, float]] = []
-        #: rows already converted into segments
+        #: rows already converted into blocks
         self._n_done = 0
-        #: (Arrow table, its DataFrame), sizes halving oldest→newest
-        self._segments: list[tuple[pa.Table, DataFrame]] = []
+        #: (Arrow table, its parquet file), sizes halving oldest→newest
+        self._blocks: list[tuple[pa.Table, str]] = []
+        #: the block directory (None until the first render and after
+        #: stop) and the finalizer that removes it
+        self._dir: "str | None" = None
+        self._remove_dir: "weakref.finalize | None" = None
+        #: files written so far (names each new block)
+        self._n_files = 0
         #: v2 side data (the 2.0 spec's metadata/exemplars/created
         #: fields), landed in the engine's existing side-relation
         #: shapes — see parse_write_request_v2_full
@@ -981,8 +1011,9 @@ class RemoteWriteReceiver:
 
     def samples(self, spark: SparkSession) -> DataFrame:
         """The pushed store as the §1.2 samples relation: the tail
-        pushed since the last call becomes a new segment (see the
-        class docstring), and the union of all segments is returned.
+        pushed since the last call becomes a new block (see the class
+        docstring), and one parquet scan of the live blocks is
+        returned.
 
         series_id comes from model.series_id_expr — the SAME canonical
         hash every base relation uses — so a push targeting an
@@ -996,34 +1027,42 @@ class RemoteWriteReceiver:
         from shards_prometheus_spark.model import series_id_expr
 
         with self._render_lock:
-            # the tail stays in _rows until its segment exists, so
-            # n_rows never dips and a failed conversion loses nothing
+            if self._dir is None and self._blocks:  # released by stop()
+                self._blocks = [(t, self._write(t)) for t, _ in self._blocks]
+            # the tail stays in _rows until its block exists, so
+            # n_rows never dips and a failed write loses nothing
             with self._lock:
                 tail, start = list(self._rows), self._n_done
             n = len(tail)
-            if n or not self._segments:
+            if n or not self._blocks:
                 table = _rows_to_arrow(tail, start)
-                keep = list(self._segments)
+                keep = list(self._blocks)
                 while keep and 2 * table.num_rows >= keep[-1][0].num_rows:
-                    older, _df = keep.pop()
-                    table = pa.concat_tables([older, table]).combine_chunks()
-                # cached: each read runs several Spark jobs over the
-                # union, which then scan the in-memory columns instead
-                # of re-reading the shipped Arrow batches
-                df = (
-                    spark.createDataFrame(table)
-                    .withColumn("series_id", series_id_expr("metric", "labels"))
-                    .cache()
-                )
-                for _t, merged in self._segments[len(keep):]:
-                    merged.unpersist()
-                self._segments = keep + [(table, df)]
+                    older, _path = keep.pop()
+                    table = pa.concat_tables([older, table])
+                self._blocks = keep + [(table, self._write(table))]
                 with self._lock:
                     del self._rows[:n]
                     self._n_done += n
-            return functools.reduce(
-                DataFrame.union, (df for _t, df in self._segments)
+            paths = [path for _t, path in self._blocks]
+        return (
+            spark.read.schema(BLOCK_SCHEMA)
+            .parquet(*paths)
+            .withColumn("series_id", series_id_expr("metric", "labels"))
+        )
+
+    def _write(self, table: pa.Table) -> str:
+        """Write one block file (making the block directory first if
+        there is none) and return its path."""
+        if self._dir is None:
+            self._dir = tempfile.mkdtemp(prefix="pushed-blocks-")
+            self._remove_dir = weakref.finalize(
+                self, shutil.rmtree, self._dir, ignore_errors=True
             )
+        self._n_files += 1
+        path = os.path.join(self._dir, f"block-{self._n_files:06d}.parquet")
+        pq.write_table(table, path)
+        return path
 
     # -- HTTP ------------------------------------------------------------
     def start(self) -> "RemoteWriteReceiver":
@@ -1052,10 +1091,16 @@ class RemoteWriteReceiver:
         return self
 
     def stop(self) -> None:
+        """Stop the HTTP server (if started) and remove the block
+        directory: frames returned before now stop being readable."""
         if self._httpd is not None:
             self._httpd.shutdown()
             self._httpd.server_close()
             self._httpd = None
+        with self._render_lock:
+            if self._remove_dir is not None:
+                self._remove_dir()
+                self._dir = self._remove_dir = None
 
 
 def roundtrip_write_requests(samples: DataFrame) -> DataFrame:

@@ -774,3 +774,61 @@ def test_label_set_folds_plan_as_hash_aggregates(spark):
             plan = formatted_plan(df)
             assert "SortAggregate" not in plan
             assert "HashAggregate" in plan
+
+
+def test_pushed_store_read_is_one_pruned_file_scan(spark):
+    """A read over base ∪ pushed scans the pushed blocks as ONE parquet
+    source whose PushedFilters carry the metric equality and the time
+    window, holds no cached relation (no InMemoryTableScan or
+    TableCacheQueryStage in the executed plan), and runs at most 2
+    Spark jobs — the cached-segment union ran 3."""
+    import re
+
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+    )
+    from shards_prometheus_spark.model import samples_multi
+    from shards_prometheus_spark.plans import formatted_plan
+    from shards_prometheus_spark.sources.remote_write import (
+        RemoteWriteReceiver,
+    )
+    from tests.conftest import count_spark_jobs
+
+    t0_ms = 1_700_000_000_000
+    rx = RemoteWriteReceiver()
+    try:
+        n = 0
+        for size in (400, 100, 30, 5):  # several live blocks
+            rx.ingest_rows(
+                [
+                    ({"__name__": "pushed_total", "shard": str(j % 4)},
+                     t0_ms + 60_000 * (n + j), float(j))
+                    for j in range(size)
+                ]
+            )
+            n += size
+            pushed = rx.samples(spark)
+        base = samples_multi(spark, SF_SMOKE).unionByName(
+            pushed, allowMissingColumns=True
+        )
+        t_us = (t0_ms + 86_400_000) * 1_000
+        df = PromQLEvaluator(base, t_us).eval_instant_map(
+            "sum(count_over_time(pushed_total[30d]))"
+        )
+        rows, n_jobs = count_spark_jobs(spark, df.collect)
+        plan = formatted_plan(df)  # the executed (final adaptive) plan
+    finally:
+        rx.stop()
+    assert [r["value"] for r in rows] == [float(n)]
+    assert "InMemoryTableScan" not in plan
+    assert "TableCacheQueryStage" not in plan
+    scans = [  # the scans of the pushed leg: not over the base store
+        node
+        for node in re.split(r"\n(?=\(\d+\) )", plan)
+        if re.match(r"\(\d+\) Scan parquet", node) and SF_SMOKE not in node
+    ]
+    assert len(scans) == 1, plan
+    pushed_filters = re.search(r"PushedFilters: \[([^\]]*)\]", scans[0])[1]
+    assert "EqualTo(metric,pushed_total)" in pushed_filters
+    assert "ts_us" in pushed_filters
+    assert n_jobs <= 2

@@ -936,7 +936,7 @@ _STALE_NAN = struct.unpack("<d", struct.pack("<Q", 0x7FF0000000000002))[0]
 def _reference_render(spark, rows):
     """The pushed store's relation spelled out row by row from the
     ingest-ordered (labels, ts_ms, value) rows: the per-read row-list
-    render the segmented store replaced, kept as the reference."""
+    render the block store replaced, kept as the reference."""
     from shards_prometheus_spark.model import series_id_expr
 
     data = []
@@ -967,13 +967,13 @@ def _store_rows(df):
 
 
 def test_segmented_store_matches_row_render(spark):
-    """The store converts each read's new tail into one Arrow segment
-    and merges segments log-structured. Across interleaved 1.0 pushes,
+    """The store writes each read's new tail as one parquet block
+    and merges blocks log-structured. Across interleaved 1.0 pushes,
     2.0 pushes, OTLP ingest_rows and reads, every render equals the
     row-by-row render of the rows ingested so far (event_id exactly
     -1..-n in ingest order, series_id from series_id_expr, identical
     ts_us/value bits), earlier renders do not change, n_rows counts
-    every row, and segment sizes halve oldest to newest."""
+    every row, and block sizes halve oldest to newest."""
     from shards_prometheus_spark.sources.otlp import (
         encode_otlp_request,
         parse_otlp_request,
@@ -1034,7 +1034,7 @@ def test_segmented_store_matches_row_render(spark):
         if step % 4 != 3:  # reads between some pushes, not all
             renders.append((rx.samples(spark), list(ingested)))
             assert rx.n_rows == len(ingested)
-            sizes = [t.num_rows for t, _df in rx._segments]
+            sizes = [t.num_rows for t, _path in rx._blocks]
             assert all(2 * new < old for old, new in zip(sizes, sizes[1:]))
 
     final = rx.samples(spark)
@@ -1105,3 +1105,137 @@ def test_segmented_store_concurrent_pushers_and_readers(spark):
             ids = sorted(r["event_id"] for r in df.select("event_id").collect())
             assert ids == list(range(-len(ids), 0)) and len(ids) >= seen
             seen = len(ids)
+
+
+def _answers(spark, samples, t_us, queries):
+    """{query: sorted (labels, value) rows} of instant queries over one
+    samples relation at t_us."""
+    from shards_prometheus_spark.functions.promql_parser import (
+        PromQLEvaluator,
+    )
+
+    ev = PromQLEvaluator(samples, t_us)
+    return {
+        q: sorted(
+            (sorted((r["labels"] or {}).items()), r["value"])
+            for r in ev.eval_instant_map(q).collect()
+        )
+        for q in queries
+    }
+
+
+def test_pushed_blocks_answer_ingest_with_reads_shapes(spark):
+    """Both read shapes of the ingest-with-reads benchmark — a count
+    over a pushed metric and `sum by (shard) (sum_over_time(...))` —
+    answer the same over the block store served as an exposer's
+    `samples_fn` as over the row-by-row reference render of the same
+    rows; a snapshot returned before a merge still answers for the
+    rows it held after the merge rewrote its blocks."""
+    import json
+    from urllib.parse import quote
+
+    from shards_prometheus_spark.sources import MetricsExposer
+    from shards_prometheus_spark.sources.remote_write import (
+        RemoteWriteReceiver,
+    )
+
+    t0_ms = 1_700_000_000_000
+    t_s = t0_ms // 1_000 + 86_400
+    queries = (
+        "sum(count_over_time(pushed_total[30d]))",
+        "sum by (shard) (sum_over_time(pushed_total[1d]))",
+    )
+
+    def get(exposer, q):
+        with urllib.request.urlopen(
+            f"http://{exposer.host}:{exposer.port}/api/v1/query"
+            f"?query={quote(q)}&time={t_s}",
+            timeout=120,
+        ) as resp:
+            return json.loads(resp.read().decode())["data"]
+
+    rx = RemoteWriteReceiver()
+    ingested: list = []
+    reference = [None]
+    pushed = MetricsExposer(
+        spark, SF_SMOKE, samples_fn=lambda: rx.samples(spark)
+    ).start()
+    ref = MetricsExposer(
+        spark, SF_SMOKE, samples_fn=lambda: reference[0]
+    ).start()
+    try:
+        snapshot = None
+        for step, size in enumerate((40, 10, 30)):
+            rows = [
+                ({"__name__": "pushed_total", "shard": str(j % 3),
+                  "user": f"u{j % 5}"},
+                 t0_ms + 60_000 * (len(ingested) + j), step + 0.25 * j)
+                for j in range(size)
+            ]
+            rx.ingest_rows(rows)
+            ingested += rows
+            reference[0] = _reference_render(spark, ingested)
+            for q in queries:
+                assert get(pushed, q) == get(ref, q)
+            if step == 1:  # two blocks: 40 rows, then 10
+                assert [t.num_rows for t, _p in rx._blocks] == [40, 10]
+                snapshot, snap_rows = rx.samples(spark), list(ingested)
+        # the 30-row tail merged both earlier blocks into one
+        assert [t.num_rows for t, _p in rx._blocks] == [80]
+        assert _answers(spark, snapshot, t_s * 1_000_000, queries) == (
+            _answers(
+                spark, _reference_render(spark, snap_rows),
+                t_s * 1_000_000, queries,
+            )
+        )
+    finally:
+        pushed.stop()
+        ref.stop()
+        rx.stop()
+
+
+def test_stop_removes_pushed_blocks(spark):
+    """The block directory lives as long as its store: `stop()` removes
+    it (a later read writes the live blocks again), a receiver dropped
+    without `stop()` is cleaned up by its finalizer, and
+    `MetricsExposer.stop()` releases its pushed store."""
+    import gc
+    import os
+
+    from shards_prometheus_spark.sources import MetricsExposer
+    from shards_prometheus_spark.sources.remote_write import (
+        RemoteWriteReceiver,
+        encode_write_request,
+    )
+
+    rows = [({"__name__": "pushed_total", "user": "1"}, 1_000 * j, 1.0)
+            for j in range(5)]
+
+    rx = RemoteWriteReceiver()
+    rx.ingest_rows(rows)
+    assert rx.samples(spark).count() == 5
+    block_dir = rx._dir
+    assert os.listdir(block_dir)
+    rx.stop()
+    assert not os.path.exists(block_dir)
+    assert rx.samples(spark).count() == 5
+    assert rx._dir != block_dir and os.listdir(rx._dir)
+
+    never_started = RemoteWriteReceiver()
+    never_started.ingest_rows(rows)
+    never_started.samples(spark).count()
+    block_dir = never_started._dir
+    del never_started
+    gc.collect()
+    assert not os.path.exists(block_dir)
+
+    exposer = MetricsExposer(spark, SF_SMOKE, remote_write=True).start()
+    try:
+        exposer.receive_remote_write(encode_write_request(rows))
+        exposer.read_samples().count()
+        block_dir = exposer._rw._dir
+        assert os.listdir(block_dir)
+    finally:
+        exposer.stop()
+    assert not os.path.exists(block_dir)
+    rx.stop()
